@@ -23,12 +23,11 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import registry
-from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.harness import memory
+from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.harness import memory, timing
 from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -145,6 +144,19 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _bench_query(qs, spark, name: str, reps: int, warmup: bool, memory_probe=None):
+    """Time build + forced run of one registry query via the shared
+    harness loop (median of ``reps``, inter-rep GC)."""
+    fn = qs[name]
+    return timing.bench_op(
+        name,
+        lambda: _force(fn(spark, SF_DIR)),
+        reps=reps,
+        warmup=warmup,
+        memory_probe=memory_probe,
+    )
+
+
 def _load_rebaseline() -> dict[str, float]:
     baseline_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "results", "bench_rebaseline.json"
@@ -163,13 +175,8 @@ def _time_epoch_controls(qs, spark) -> dict[str, float]:
     out: dict[str, float] = {}
     for name in EPOCH_CONTROLS:
         try:
-            fn = qs[name]
-            times = []
-            for _ in range(EPOCH_CONTROL_REPS):
-                t0 = time.perf_counter()
-                _force(fn(spark, SF_DIR))
-                times.append(time.perf_counter() - t0)
-            out[name] = round(statistics.median(times), 4)
+            t = _bench_query(qs, spark, name, EPOCH_CONTROL_REPS, warmup=False)
+            out[name] = round(t.median_s, 4)
         except Exception as exc:  # noqa: BLE001
             print(f"  epoch-control {name}: ERROR {exc}", file=sys.stderr)
     return out
@@ -263,32 +270,28 @@ def main() -> None:
         # (round 3 lost all numbers to a single AnalysisException) —
         # record the error and keep the suite going.
         try:
-            fn = qs[name]
-            _force(fn(spark, SF_DIR))  # per-query warm-up rep (H4): JIT
-            # of this query's generated code out of the timed region
-            # H3 memory probes around the timed reps — the reference
-            # publishes time + memory delta per op (datatable_benchmark.py
-            # psutil RSS, updated.rs working-set, Benchmark1.java JVM
-            # total-free); Spark splits memory across the Python driver
-            # and the JVM, so both are reported, never a pretend-sum.
-            rss_before = memory.python_rss_mb()
-            times = []
-            for _ in range(REPS):
-                t0 = time.perf_counter()
-                _force(fn(spark, SF_DIR))
-                times.append(time.perf_counter() - t0)
-            per_query[name] = round(statistics.median(times), 4)
+            # per-query warm-up rep (H4): JIT of this query's generated
+            # code out of the timed region. H3 memory probes around the
+            # timed reps — the reference publishes time + memory delta
+            # per op (datatable_benchmark.py psutil RSS, updated.rs
+            # working-set, Benchmark1.java JVM total-free); Spark splits
+            # memory across the Python driver and the JVM, so both are
+            # reported, never a pretend-sum.
+            t = _bench_query(
+                qs, spark, name, REPS, warmup=True, memory_probe=memory.python_rss_mb
+            )
+            per_query[name] = round(t.median_s, 4)
             # min/max across reps: a wide spread flags the host
             # contention waves that have repeatedly distorted rounds
             # (see SCALE.md) — the artifact then documents its own
             # noise instead of leaving a slow median unexplained
-            per_query_spread[name] = [round(min(times), 4), round(max(times), 4)]
+            per_query_spread[name] = [round(min(t.times_s), 4), round(max(t.times_s), 4)]
             # H3: retained heap after forced GC (live-set size), not a
             # total-free delta across an uncontrolled GC boundary —
             # the latter swung tens of GB negative on a 128 GiB heap
             # (round-4 verdict "What's wrong #3") and means nothing.
             per_query_mem[name] = {
-                "delta_py_rss_mb": round(memory.python_rss_mb() - rss_before, 1),
+                "delta_py_rss_mb": round(t.memory_mb, 1),
                 "jvm_retained_heap_mb": round(memory.jvm_heap_after_gc_mb(spark), 1),
             }
             print(f"  {name}: {per_query[name]:.3f}s", file=sys.stderr)
@@ -328,16 +331,11 @@ def main() -> None:
     ]
     for name in suspects:
         try:
-            fn = qs[name]
-            times = []
-            for _ in range(REPS):
-                t0 = time.perf_counter()
-                _force(fn(spark, SF_DIR))
-                times.append(time.perf_counter() - t0)
-            second = round(statistics.median(times), 4)
+            t = _bench_query(qs, spark, name, REPS, warmup=False)
+            second = round(t.median_s, 4)
             remeasured[name] = [per_query[name], second]
             per_query[name] = second
-            per_query_spread[name] = [round(min(times), 4), round(max(times), 4)]
+            per_query_spread[name] = [round(min(t.times_s), 4), round(max(t.times_s), 4)]
             print(f"  re-measure {name}: {remeasured[name]} -> {per_query[name]:.3f}s", file=sys.stderr)
         except Exception as exc:  # noqa: BLE001
             print(f"  re-measure {name}: ERROR {exc}", file=sys.stderr)

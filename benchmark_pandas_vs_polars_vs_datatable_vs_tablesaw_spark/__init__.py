@@ -20,7 +20,7 @@ Layout:
                 similarity, text, timeseries, multimodal)
     plans/      explain/plan-inspection helpers
     streaming/  Structured Streaming formulations over `events`
-    harness/    timing, memory probes, suite runner (H1-H7)
+    harness/    timing, memory probes, results plot (H1-H7)
 """
 
 from .session import get_spark

@@ -1,69 +1,12 @@
-"""Benchmark suite runner — ties H1-H7 together.
+"""H7 — render per-operation medians as a comparison chart.
 
-Reproduces the reference's harness shape: per-operator timing in
-isolation (input cached, action forced per op — §3.1) alongside the
-fused-pipeline timing (one action over the whole chain — §3.2), with
-the long-format results sink (S7) and optional matplotlib comparison
-plot (H7).
+The reference plots its long-format results (`NB-main` cells 6-7);
+``plot_results`` does the same for a dict of :class:`timing.OpTiming`.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-
-from ..sources.results_sink import ResultRow, write_results
-from . import memory, timing
-
-
-def force(df: DataFrame) -> int:
-    """The canonical forcing action: count() runs the full plan but
-    ships only one long back to the driver."""
-    return df.count()
-
-
-def run_suite(
-    spark: SparkSession,
-    sf_dir: str,
-    suite: dict[str, Callable[[SparkSession, str], DataFrame]],
-    reps: int = 3,
-    size: int = 0,
-    results_path: str | None = None,
-) -> dict[str, timing.OpTiming]:
-    """Time each named query (median of reps, warm-up discarded)."""
-    out: dict[str, timing.OpTiming] = {}
-    for name, fn in suite.items():
-        res = timing.bench_op(
-            name,
-            lambda fn=fn: force(fn(spark, sf_dir)),
-            reps=reps,
-            memory_probe=memory.python_rss_mb,
-        )
-        out[name] = res
-    if results_path:
-        rows = [
-            ResultRow(size=size, operation=t.operation, time=t.median_s, memory=t.memory_mb)
-            for t in out.values()
-        ]
-        write_results(rows, results_path)
-    return out
-
-
-def bench_json(results: dict[str, timing.OpTiming], sf: float) -> str:
-    """The driver-contract single JSON line for bench.py."""
-    queries = {name: round(t.median_s, 4) for name, t in results.items()}
-    total = round(sum(queries.values()), 4)
-    return json.dumps(
-        {
-            "metric": "suite_total",
-            "value": total,
-            "unit": "sec",
-            "queries": queries,
-            "sf": sf,
-        }
-    )
+from . import timing
 
 
 def plot_results(results: dict[str, timing.OpTiming], path: str) -> bool:

@@ -168,7 +168,7 @@ ELSE [text] END
 # lambda each `element_at(split(text, ' '), i)` re-splits the whole
 # text per element — O(tokens^2) allocations per document. That
 # allocation burst is what collapsed 32-concurrent-task stages under a
-# loaded heap (VERDICT r14 #1; reproduced in scripts/coldq_probe.py /
+# loaded heap (VERDICT r14 #1; reproduced in
 # results/winnow_token_hash_ab.json as isolated 25 s reps). Shingle
 # VALUES are identical; only the evaluation cost changes.
 _SHINGLES_FROM_TOKS_EXPR = """
@@ -963,7 +963,7 @@ def dedup_substring_exact(
     partial-aggregates map-side to count hash occurrences; (3) the
     extend-match VERIFY re-derives gram text only for postings whose
     hash is duplicated (candidates, a vanishing fraction at scale —
-    measured by scripts/substring_scale_probe.py) and re-counts on the
+    measured in results/substring_scale.json) and re-counts on the
     text itself, so polynomial-hash collisions (the mod-1e9+7 space
     WILL birthday at 100 TB) can never fabricate a span; (4) island
     merge is one window function over (doc_id, pos). Candidate gram
@@ -1250,7 +1250,7 @@ def embedding_cosine_pairs(
 ) -> DataFrame:
     """The LSH-candidate + exact-verify pair pipeline over any
     (vec_id, embedding) DataFrame — shared by the registered fixture
-    query and the scale probes (scripts/embdedup_scale_probe.py)."""
+    query and the 1M-vector scale run (SCALE.md "Measured headroom")."""
     from ..functions import vectors
     from .similarity import _hyperplanes, lsh_bucket
 
@@ -2151,7 +2151,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB — the probe join then co-locates on the bucket key with no
     corpus-side shuffle). Query side: the batch computes its own
     signatures/bands — cost proportional to the BATCH, never the
-    corpus (scripts/incremental_minhash_probe.py measures exactly
+    corpus (results/incremental_minhash_probe.json measures exactly
     this) — and equi-joins the index on (band, bh). Candidates
     dedupe, re-attach both signatures, verify est_jaccard >= 0.5.
     Output: (batch_id, corpus_id, est_jaccard) admission decisions.

@@ -77,7 +77,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, and every node's out-degree (hence its wedge fan-out) is
     bounded by the graph's arboricity instead of its raw degree, which
     is what keeps the wedge space linear-ish on skewed graphs (the
-    hub-graph measurement is scripts/graph_scale_probe.py; key-only
+    hub-graph measurement is in SCALE.md "Measured headroom"; key-only
     orientation lets one hub own O(deg²) wedges). The triangle SET is
     orientation-invariant, so the oracle needs no knowledge of the
     orientation. Corners credit via union-all unpivot, one final
@@ -506,7 +506,7 @@ def link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFr
     top-15. The deterministic (cn desc, u, v) total order pins the
     cut. Hub guard: only centers with degree ≤ ``_WEDGE_DEG_CAP``
     enumerate wedges — a center's wedge space is deg², so skewed hubs
-    are what explode the join (scripts/graph_scale_probe.py measures a
+    are what explode the join (SCALE.md "Measured headroom" records a
     27× wedge-space cut from exactly this cap on a 1M-node hub graph);
     a node co-purchased with everything predicts nothing specific, so
     dropping hub CENTERS (their pairs still form through other shared

@@ -636,8 +636,8 @@ def ann_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus streams through mapInPandas as Arrow batches and cosine
     scores come from one numpy matmul per batch (E @ Q.T in BLAS)
     instead of the per-row expression fold — measured ~24x faster on
-    the assignment-shaped workload (scripts/ann_scale_probe.py), and
-    the SAME DuckDB oracle checks both formulations.
+    the assignment-shaped workload (SCALE.md "Measured headroom",
+    IVF-Flat row), and the SAME DuckDB oracle checks both formulations.
 
     The query block (10 vectors) collects to the driver and rides the
     closure — the documented pattern for small broadcast-side dense
@@ -1726,13 +1726,9 @@ def _on_disk_bytes(path: str) -> int:
 def _ivfpq_should_persist(sf_dir: str) -> bool:
     """Size gate for the ivfpq shared-input persist (VERDICT r7 #4).
 
-    SPARK_GRAFT_IVFPQ_NO_PERSIST=1 force-disables (A/B probe off arm);
     SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES overrides the threshold (the
-    plan test and the probe's on arm set it to 0 to force the gate
-    open at fixture scale).
+    plan test sets it to 0 to force the gate open at fixture scale).
     """
-    if os.environ.get("SPARK_GRAFT_IVFPQ_NO_PERSIST") == "1":
-        return False
     min_bytes = int(
         os.environ.get(
             "SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES", _IVFPQ_PERSIST_MIN_BYTES
@@ -1775,8 +1771,9 @@ def ivfpq_ann_topk(
     # queries / qdims) — without a persist each re-runs the scan, the
     # repartition exchange, AND the norm fold (r5 plan audit flagged
     # the recompute; VERDICT r5 "Next round" #4). SIZE-GATED since r8
-    # (VERDICT r7 #4): both A/Bs (scripts/ivfpq_persist_ab_probe.py,
-    # fresh-JVM and within-JVM arms) measured the persist
+    # (VERDICT r7 #4): both A/Bs (results/ivfpq_persist_ab.json and
+    # results/ivfpq_persist_ab_within.json, fresh-JVM and within-JVM
+    # arms) measured the persist
     # neutral-to-negative at fixture scale — cache build +
     # InMemoryTableScan overhead >= the 5x recompute it saves on a
     # <1 MB input — so below _IVFPQ_PERSIST_MIN_BYTES of on-disk
@@ -1787,7 +1784,6 @@ def ivfpq_ann_topk(
     # test_ivfpq_shares_one_cached_embeddings_scan forces the gate
     # open via SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES=0 and asserts ONE
     # parquet scan node with >=5 InMemoryTableScan consumers.
-    # SPARK_GRAFT_IVFPQ_NO_PERSIST=1 force-disables (probe off arm).
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
@@ -2086,12 +2082,12 @@ def _ensure_ivfpq_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-PRUNES the scan (SelectedBucketsCount in the plan): a probe
     reads only the n_probe lists' buckets, never the whole index —
     probe cost ∝ probed fraction, independent of total corpus size
-    (scripts/ivfpq_scale_probe.py measures it). Storage is one copy
+    (results/ivfpq_scale_probe.json measures it). Storage is one copy
     of the vectors plus codes, exactly FAISS's IVFPQ-with-refine
     layout flattened into one columnar table. Build is a one-time
     two-pass job over the source parquet (assignment pass + encode
     pass); write/guard machinery is storage.ensure_bucketed_specs,
-    shared with the scale probe so it measures exactly this layout."""
+    shared with the scale run so it measured exactly this layout."""
     from ..sources.storage import _tag, ensure_bucketed_specs
 
     tag = _tag(sf_dir, "embeddings")
@@ -2356,7 +2352,7 @@ def _semdedup_dropped(idx: DataFrame) -> DataFrame:
     some SMALLER-id vector in its coarse list sits at cosine >=
     SEMDEDUP_TAU (w_cos = the best such witness). The decision set
     shared by :func:`semdedup_apply` and the at-scale certificate in
-    scripts/semdedup_scale_probe.py, so the probe measures exactly
+    results/semdedup_scale_probe.json, so that run measured exactly
     the shipped decision join (same bucketed SMJ, same expressions)."""
     a = idx.select("list_id", "vec_id", "embedding", "nrm")
     b = idx.select(

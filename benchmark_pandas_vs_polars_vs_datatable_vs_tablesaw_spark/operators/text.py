@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_parallel
+from .dedup import _SHINGLES_SQL, _distinct_shingled
 
 def _tokens():
     return F.split(F.col("text"), " ")
@@ -733,58 +734,6 @@ GROUP BY source, bin
 """
 
 
-# word 3-gram shingles, mirrored from operators/dedup.py so the
-# contamination check measures the same shingle space the dedup
-# operators use. Guarded CASE keeps element_at in-range under ANSI.
-_SHINGLES_EXPR = """
-CASE WHEN size(split(text, ' ')) >= 3 THEN
-  transform(sequence(1, size(split(text, ' ')) - 2),
-            i -> concat_ws(' ', element_at(split(text, ' '), i),
-                                element_at(split(text, ' '), i + 1),
-                                element_at(split(text, ' '), i + 2)))
-ELSE array(text) END
-"""
-
-_SHINGLES_SQL = """
-CASE WHEN len(string_split(text, ' ')) >= 3 THEN
-  list_transform(range(1, len(string_split(text, ' ')) - 1),
-                 i -> string_split(text, ' ')[i] || ' ' ||
-                      string_split(text, ' ')[i + 1] || ' ' ||
-                      string_split(text, ' ')[i + 2])
-ELSE [text] END
-"""
-
-# _SHINGLES_EXPR with the token split hoisted into a materialized
-# `_toks` column (r15, guide §1.2 step 2): inside an interpreted HOF
-# lambda each `element_at(split(text, ' '), i)` re-splits the full
-# text per element — O(tokens^2) allocations per document, the same
-# allocation-burst class that made the winnow fold collapse under 32
-# concurrent tasks (VERDICT r14 #1; reproduced here as a 25.6 s rep
-# in scripts/coldq_probe.py before the fix). Splitting once per row
-# makes the shingle build O(tokens).
-_SHINGLES_FROM_TOKS_EXPR = """
-CASE WHEN size(_toks) >= 3 THEN
-  transform(sequence(1, size(_toks) - 2),
-            i -> concat_ws(' ', element_at(_toks, i),
-                                element_at(_toks, i + 1),
-                                element_at(_toks, i + 2)))
-ELSE array(text) END
-"""
-
-
-def _distinct_shingles(frame: DataFrame, *cols: str) -> DataFrame:
-    """(cols..., sh) rows: per-row DISTINCT word-3-gram shingles from a
-    single pre-split token array (values identical to _SHINGLES_EXPR)."""
-    return (
-        frame.withColumn("_toks", F.split(F.col("text"), " "))
-        .select(
-            *cols,
-            F.explode(
-                F.expr(f"array_distinct({_SHINGLES_FROM_TOKS_EXPR})")
-            ).alias("sh"),
-        )
-    )
-
 CONTAMINATION_THRESHOLD = 0.5
 
 
@@ -820,12 +769,12 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.filter(F.col("doc_id") % 17 != 0).unionByName(leaks)
 
-    # r15: shingles from a pre-split token column (_distinct_shingles)
-    # — the in-lambda split(text) re-evaluation was O(tokens^2) per doc
-    # and collapsed under 32 concurrent tasks exactly like the winnow
-    # fold (VERDICT r14 #1 sibling warning; 25.6 s rep reproduced).
-    bench_sh = _distinct_shingles(bench).select("sh").distinct()
-    corpus_sh = _distinct_shingles(corpus, "doc_id")
+    # r15: shingles from a pre-split token column (dedup's
+    # _distinct_shingled) — the in-lambda split(text) re-evaluation was
+    # O(tokens^2) per doc and collapsed under 32 concurrent tasks
+    # exactly like the winnow fold (VERDICT r14 #1 sibling warning).
+    bench_sh = _distinct_shingled(bench, "sh", ()).select("sh").distinct()
+    corpus_sh = _distinct_shingled(corpus)
     marked = corpus_sh.join(
         F.broadcast(bench_sh.withColumn("hit", F.lit(1))), "sh", "left"
     )
@@ -1313,7 +1262,7 @@ def _bpe_merge_rounds_delta(
     frame so the property tests can drive hand-built micro corpora.
     ``stats``, when a list, receives one dict per round
     ({rank, affected_docs, round_s}) — the instrumentation
-    scripts/bpe_scale_probe.py uses for its round-cost-∝-affected-docs
+    results/bpe_scale_probe.json records for its round-cost-∝-affected-docs
     cell; it costs one extra count() per round and is skipped when
     None (every registry/test path).
 
@@ -1336,8 +1285,8 @@ def _bpe_merge_rounds_delta(
     wall time (measured: depth-12 delta 394 s with persist-only vs
     flat rounds after the checkpoint swap). At 100 TB both live as
     stored tables and the affected slice is a partitioned update;
-    per-round cost is ∝ affected docs (scripts/bpe_scale_probe.py
-    measures the affected fraction and the per-round delta-vs-rescan
+    per-round cost is ∝ affected docs (results/bpe_scale_probe.json
+    records the affected fraction and the per-round delta-vs-rescan
     gap).
     """
     spark = docs.sparkSession
@@ -1449,7 +1398,7 @@ def bpe_train_merges_delta(
     pair extraction over ONLY the affected docs (top merges early in
     training touch most docs; by mid-vocabulary the affected fraction
     collapses, which is where real trainers spend their rounds —
-    scripts/bpe_scale_probe.py's delta cell measures the fraction and
+    results/bpe_scale_probe.json's delta cell records the fraction and
     the per-round gap at 1M docs). The count state is corpus-wide but
     (pair, n)-shaped — at 100 TB a stored table keyed by pair, with
     the round's deltas a map-side-combined aggregate over the
@@ -1461,8 +1410,8 @@ def bpe_train_merges_delta(
 
 # Adaptive trainer policy (VERDICT r12 #5, re-derived twice on
 # probe evidence). The r12 sequential-cells probe suggested "delta
-# loses early"; the r13 interleaved A/B (results/bpe_adaptive_ab.json,
-# scripts/bpe_adaptive_ab_probe.py) exposed that reading as a
+# loses early"; the r13 interleaved A/B (results/bpe_adaptive_ab.json)
+# exposed that reading as a
 # MEASUREMENT ARTIFACT: the sequential trainer persist()s its 1-row
 # winners and Spark's CacheManager serves any later identical plan
 # from them, so every same-session comparison that ran sequential
@@ -1512,7 +1461,7 @@ def _bpe_merge_rounds_adaptive(
     (text) frame so the property tests can drive hand-built micro
     corpora. ``stats``, when a list, receives one dict per APPLIED
     round ({rank, path, n, round_s}; path in lazy|delta|recount) for
-    scripts/bpe_adaptive_ab_probe.py and the path-exercise tests.
+    the path-exercise tests (results/bpe_adaptive_ab.json used it too).
 
     Every mode selects from exact corpus-wide pair counts — the lazy
     phase recounts from the merged-so-far corpus, the stateful phase
@@ -1650,7 +1599,7 @@ def bpe_train_merges_adaptive(
     escape for late heavy merges (>= BPE_ADAPTIVE_RECOUNT_FRAC x
     docs). Rationale and measurements: the policy comment above
     _bpe_merge_rounds_adaptive and the interleaved
-    scripts/bpe_adaptive_ab_probe.py (which also exposed the r12
+    A/B in results/bpe_adaptive_ab.json (which also exposed the r12
     "delta loses early" reading as a CacheManager artifact — the
     sequential trainer's persisted winners were serving later
     same-session comparisons from cache).

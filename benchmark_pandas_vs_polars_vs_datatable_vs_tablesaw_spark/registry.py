@@ -122,7 +122,8 @@ _PRIORITY = (
     #     fills the remaining slots; the r9 remainder queues for
     #     round 16. (bpe_pair_counts — also edited this round —
     #     already sits in the r9 block below.)
-    # r8 vintage (all 21):
+    # r8 vintage (20 here; the 21st, phrase_proximity_topk, sits in
+    # the changed-since-row block above):
     "lang_confusion_matrix",
     "lang_id_heuristic",
     "map_funcs_suite",

@@ -90,7 +90,7 @@ def get_spark(
     if local_dir == "/dev/shm" or local_dir.startswith("/dev/shm/"):
         # sendfile(2) buys nothing on tmpfs shuffle dirs — the
         # user-space copy path is consistently ~25% faster on the
-        # 30M-row sort (scripts/sort_offheap_probe.py, two A/B runs:
+        # 30M-row sort (SCALE.md "Sort follow-up (round 5)", two A/B runs:
         # 1.34-1.46s vs 1.80-1.90s baseline). On disk-backed local
         # dirs (a real cluster's NVMe) transferTo's zero-copy is the
         # right default, so the override is tmpfs-gated.

@@ -70,8 +70,8 @@ def ensure_bucketed_specs(spark: SparkSession, specs) -> list[DataFrame]:
     the same call (ADVICE r11: without the cascade, a band table that
     kept its files would be served against freshly rebuilt signatures,
     correct only by the unstated determinism of build_fn). Shared by
-    operators/dedup._ensure_minhash_index_tables and
-    scripts/incremental_minhash_probe.py so the probe measures exactly
+    operators/dedup._ensure_minhash_index_tables and the scale run in
+    results/incremental_minhash_probe.json, which measured exactly
     the layout the operator ships.
 
     CONTRACT (ADVICE r12): the rebuild cascade propagates only WITHIN

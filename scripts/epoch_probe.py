@@ -25,9 +25,7 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,16 +42,10 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     baseline = bench._load_rebaseline()
-    controls: dict[str, float] = {}
-    for name in bench.EPOCH_CONTROLS:
-        fn = qs[name]
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warm
-        ts = []
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            ts.append(time.perf_counter() - t0)
-        controls[name] = round(statistics.median(ts), 4)
+    controls = {
+        name: round(bench._bench_query(qs, spark, name, REPS, warmup=True).median_s, 4)
+        for name in bench.EPOCH_CONTROLS
+    }
     factor = bench.epoch_factor({"now": controls}, baseline)
     calm = factor <= bench.EPOCH_MARGIN
     print(

@@ -1,27 +1,33 @@
 #!/usr/bin/env python
-"""Scale-headroom probe: the core operator suite on a 10M-row (and
-optionally larger) generated table — evidence that the fixture-tuned
-plans hold when the data grows ~17x past sf0.1, on the same local[32]
-box. Results are recorded in SCALE.md.
+"""Scale lane: time registry queries on a k-times blown-up fixture.
 
-Usage: python scripts/scale_probe.py [n_rows]
+Usage: python scripts/scale_probe.py <blowup> <cpus> <query[,query...]>
+
+Every fixture table under $SPARK_GRAFT_SF_DIR (default sf0.1) is
+written ``blowup`` times over (``sources.generators.duplicate_rows``:
+each row repeated k times, narrow, no shuffle) into a temp sf dir;
+the named queries then run there on local[<cpus>] through
+``harness.timing.bench_op`` (one warm-up, median of 3, build plus a
+noop-sink forced run). Prints one JSON document with the per-query
+medians and reps. Past results are recorded in SCALE.md
+"Measured headroom".
 """
 
 from __future__ import annotations
 
+import json
 import os
-import statistics
 import sys
-import time
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import get_spark
+from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import catalog, registry
+from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.harness import timing
+from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.session import get_spark
 from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.sources import generators
 
-N = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000_000
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPS = 3
 
 
@@ -30,76 +36,27 @@ def _force(df) -> None:
 
 
 def main() -> None:
-    spark = get_spark("scale-probe")
-    globals()["spark"] = spark
+    if len(sys.argv) != 4:
+        raise SystemExit(__doc__)
+    blowup, cpus, queries = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3].split(",")
+    qs = registry.queries()
+    unknown = [q for q in queries if q not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    spark = get_spark("scale-probe", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    path = f"/tmp/scale_probe_{N}.parquet"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        generators.scaling4(spark, N, seed=42, num_partitions=64).write.mode(
-            "overwrite"
-        ).parquet(path)
-    df = spark.read.parquet(path)
-
-    suite = {
-        "filter": lambda: _force(df.filter(F.col("value1") > 110)),
-        "groupby_mean": lambda: _force(
-            df.groupBy("category").agg(F.avg("value2").alias("m"))
-        ),
-        "sort": lambda: _force(df.orderBy("value1")),
-        "topk": lambda: _force(df.orderBy(F.col("value1").desc()).limit(100)),
-        "lazy_pipeline": lambda: _force(
-            df.filter(F.col("value2") > 500.0)
-            .groupBy("category")
-            .agg(F.avg("id").alias("id_mean"), F.avg("value1").alias("v1_mean"))
-            .orderBy("category")
-        ),
-        "window_rank": lambda: _force(
-            df.withColumn(
-                "rn",
-                F.row_number().over(
-                    __import__(
-                        "pyspark.sql.window", fromlist=["Window"]
-                    ).Window.partitionBy("category").orderBy("value1", "id")
-                ),
-            ).filter(F.col("rn") <= 10)
-        ),
-        # Join shapes: dim = 100k keys derived from the fact (broadcast
-        # side), probing (a) broadcast hash join + agg, (b) the Q18
-        # IN-over-HAVING double pass on a high-cardinality key.
-        "broadcast_join_agg": lambda: _force(
-            df.join(
-                F.broadcast(
-                    spark.range(100_000).select(
-                        F.col("id").alias("d_id"),
-                        (F.col("id") % 7).alias("d_bucket"),
-                    )
-                ),
-                df.id % 100_000 == F.col("d_id"),
+    out = {}
+    with tempfile.TemporaryDirectory(prefix="scale-probe-") as tmp:
+        sf_dir = os.path.join(tmp, f"x{blowup}")
+        for table in catalog.TABLES:
+            generators.duplicate_rows(catalog.read_raw(spark, SF_DIR, table), blowup).write.parquet(
+                f"{sf_dir}/{table}.parquet"
             )
-            .groupBy("d_bucket")
-            .agg(F.avg("value1").alias("v1_mean"), F.count("*").alias("n"))
-        ),
-        "having_in_join": lambda: _force(
-            df.groupBy((F.col("id") % 1_000_000).alias("k"))
-            .agg(F.sum("value2").alias("tot"))
-            .filter(F.col("tot") > 5200)
-            .join(
-                df.withColumn("k", F.col("id") % 1_000_000),
-                "k",
-            )
-            .groupBy("category")
-            .agg(F.count("*").alias("n"), F.round(F.avg("tot"), 2).alias("avg_tot"))
-        ),
-    }
-    print(f"rows={N:,}", file=sys.stderr)
-    for name, thunk in suite.items():
-        thunk()  # warm-up
-        times = []
-        for _ in range(REPS):
-            t0 = time.perf_counter()
-            thunk()
-            times.append(time.perf_counter() - t0)
-        print(f"  {name:<14} {statistics.median(times):7.2f} s", file=sys.stderr)
+        for q in queries:
+            t = timing.bench_op(q, lambda fn=qs[q]: _force(fn(spark, sf_dir)), reps=REPS)
+            out[q] = {"median_s": round(t.median_s, 4), "reps_s": [round(x, 4) for x in t.times_s]}
+            print(f"  {q}: {t.median_s:.3f}s", file=sys.stderr)
+    print(json.dumps({"base_sf_dir": SF_DIR, "blowup": blowup, "cpus": cpus, "queries": out}, indent=1))
 
 
 if __name__ == "__main__":

@@ -4,7 +4,7 @@ decisions must be INVARIANT to how the stream is micro-batched —
 proven on a SHUFFLED-id, arrival-ordered split (VERDICT r10 #2).
 
 Builds a synthetic corpus (same vocab-sampled generator family as
-dedup_scale_probe.py) whose ingest order is ARRIVAL order, not id
+the MinHash scale corpus in SCALE.md "Measured headroom") whose ingest order is ARRIVAL order, not id
 order: base docs carry ids decoupled from arrival (a fixed XOR
 permutation, offset high), and each planted near-dup is a
 RE-SUBMISSION — it arrives ~20 slots after its original but carries a

@@ -363,3 +363,87 @@ def test_executor_peaks_report_real_usage(spark):
     assert peaks, "local mode must report at least the driver block manager"
     for used in peaks.values():
         assert 0.0 <= used < 130_000.0
+
+
+def _repo_root() -> str:
+    import os
+
+    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _load_script(name: str):
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(_repo_root(), "scripts", f"{name}.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_named_scripts_exist():
+    """Every ``scripts/<name>.py`` the package, the tests, bench.py or
+    README.md names must exist: a deleted probe's number lives in its
+    committed results/*.json or SCALE.md, never behind a dead path."""
+    import os
+    import re
+
+    root = _repo_root()
+    files = [os.path.join(root, "bench.py"), os.path.join(root, "README.md")]
+    for sub in ("benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark", "tests"):
+        for dirpath, _dirs, names in os.walk(os.path.join(root, sub)):
+            files += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
+    missing = set()
+    for path in files:
+        with open(path, encoding="utf-8") as f:
+            for name in re.findall(r"scripts/(\w+)\.py", f.read()):
+                if not os.path.exists(os.path.join(root, "scripts", f"{name}.py")):
+                    missing.add(f"{os.path.relpath(path, root)}: scripts/{name}.py")
+    assert not missing, sorted(missing)
+
+
+def test_timing_loop_lives_only_in_harness():
+    """harness.timing.bench_op is the one per-rep timing loop: bench.py
+    and scripts/ time through it, never through their own perf_counter."""
+    import os
+
+    root = _repo_root()
+    paths = [os.path.join(root, "bench.py")] + [
+        os.path.join(root, "scripts", n)
+        for n in os.listdir(os.path.join(root, "scripts"))
+        if n.endswith(".py")
+    ]
+    offenders = [p for p in paths if "perf_counter" in open(p, encoding="utf-8").read()]
+    assert not offenders, offenders
+
+
+def test_ab_archive_arm_imports_under_its_own_name(tmp_path):
+    """ab.py's base arm: ``git archive HEAD`` of the package imports
+    under a distinct module name and exposes the working tree's query
+    set (no Spark needed — registry import is pure Python)."""
+    import sys
+
+    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import registry
+
+    ab = _load_script("ab")
+    try:
+        archived = ab.archived_registry("HEAD", str(tmp_path))
+        pkg = archived.__name__.split(".")[0]
+        assert pkg.startswith("abpkg_") and pkg != ab.PKG
+        assert archived.__file__.startswith(str(tmp_path))
+        assert set(archived.REGISTRY) == set(registry.REGISTRY)
+    finally:
+        sys.path.remove(str(tmp_path))
+        for mod in [m for m in sys.modules if m.startswith("abpkg_")]:
+            del sys.modules[mod]
+
+
+def test_ab_keep_rule_boundary():
+    import math
+
+    ab = _load_script("ab")
+    assert ab.keeps(1.15)
+    assert not ab.keeps(math.nextafter(1.15, 0.0))
+    assert not ab.keeps(1.149)

@@ -447,7 +447,6 @@ def test_ivfpq_persist_gate_off_at_fixture_scale(spark, sf_dir, monkeypatch):
     from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators import similarity
 
     monkeypatch.delenv("SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_IVFPQ_NO_PERSIST", raising=False)
     assert not similarity._ivfpq_should_persist(sf_dir)
     spark.catalog.clearCache()
     df = similarity.ivfpq_ann_topk(spark, sf_dir)
@@ -500,8 +499,7 @@ def test_sentence_dedup_single_scan_and_shuffle_budget(spark, sf_dir):
     and 4 exchanges (fixture repartition, window-by-digest, per-doc
     rollup, output sort). The groupBy+join-back form this replaces
     shows 2 scans and 5 exchanges for the same answer, measured 2.4x
-    slower at 10M chunk rows (scripts/sentence_dedup_ab_probe.py,
-    SCALE.md)."""
+    slower at 10M chunk rows (SCALE.md, sentence-dedup notes)."""
     import re
 
     from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators import dedup
