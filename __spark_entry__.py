@@ -4,11 +4,12 @@ Thin shim over the package registry: every operator implemented in
 ``benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark`` registers
 itself with both a PySpark formulation and (where deterministic) a
 DuckDB oracle; this module just re-exports the registry in the shape
-the driver expects.
+the driver expects, ordered by the attestation ledger.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from collections.abc import Callable
@@ -23,6 +24,9 @@ from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators.core im
 )
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
+LEDGER = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "results", "attestation_ledger.json"
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -35,10 +39,22 @@ def entry(spark: SparkSession) -> DataFrame:
     return flagship_lazy_pipeline(spark, SMOKE_SF_DIR)
 
 
+def window_key(name: str, ledger: dict[str, dict]) -> tuple[bool, int, str]:
+    """Driver check order: queries changed since their last driver row
+    (or never checked) first, then the stalest row, then by name."""
+    e = ledger.get(name, {})
+    return (not e.get("changed_since_row", True), e.get("last_row_round", 0), name)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ §7
-    extensions). Each callable takes (spark, sf_dir) -> DataFrame."""
-    return _registry.queries()
+    extensions). Each callable takes (spark, sf_dir) -> DataFrame.
+    The driver checks a prefix, so the order is window_key over the
+    committed ledger (refresh: python scripts/attestation_ledger.py)."""
+    with open(LEDGER) as f:
+        ledger = json.load(f)["queries"]
+    qs = _registry.queries()
+    return {name: qs[name] for name in sorted(qs, key=lambda n: window_key(n, ledger))}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -3128,16 +3128,6 @@ ORDER BY source
 _GOPHER_TOP_BP = {2: 2000, 3: 1800, 4: 1600}
 _GOPHER_DUP_BP = {5: 1500, 6: 1400}
 
-_GOPHER_GRAMS_EXPR = """
-flatten(transform(array(2, 3, 4, 5, 6), n ->
-  CASE WHEN size(T) >= n THEN
-    transform(sequence(1, size(T) - n + 1),
-              i -> named_struct('n', n,
-                                'gram', concat_ws(' ', slice(T, i, n))))
-  ELSE CAST(array() AS array<struct<n: int, gram: string>>) END))
-"""
-
-
 def _gram_run_fold(n: int) -> str:
     """Per-document n-gram repetition fold (r14 optimization): sort the
     doc's n-gram array and fold over it counting equal-gram runs,
@@ -3473,9 +3463,13 @@ def phrase_proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled (doc_id, bucket) postings into a banded self-join —
     machinery a positional index needs when postings live on
     different rows, pure overhead when both lists are already in the
-    same row. Per-row cost is f_A x f_B (the query terms' in-doc
-    frequencies) — the same candidate count the banded join bounded —
-    and the interleaved A/B read 1.44x with the oracle unchanged.
+    same row. Per-row cost is f_A x f_B comparisons (the query terms'
+    in-doc frequencies), and the min-distance term allocates an
+    f_A x f_B array. The banded join compared only positions in
+    neighbouring buckets, so this is more work than it did on a
+    document where both terms are frequent; at the fixture's term
+    frequencies the interleaved A/B still read 1.44x with the oracle
+    unchanged.
     """
     docs = load_table(spark, sf_dir, "documents")
     pa = (

@@ -112,11 +112,6 @@ def single_partition_subtrees(df: DataFrame) -> list[str]:
     return subtrees
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """WholeStageCodegen span count — fewer, wider spans are better."""
-    return plan_text(df).count("WholeStageCodegen")
-
-
 def plan_signature(df: DataFrame) -> dict[str, int]:
     """Structural fingerprint of the physical plan: distinct node
     counts for the operators whose appearance/disappearance IS a perf

@@ -1,10 +1,11 @@
 """Neutral-cwd contract sweep: entry() smoke at sf0.001, then every
 queries() entry vs oracle_sql() via DuckDB at sf0.01."""
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from tests.helpers import run_differential

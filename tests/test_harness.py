@@ -26,22 +26,6 @@ def test_memory_probes_report_components(spark):
     assert heap > 1.0, "JVM heap probe must reach the driver runtime"
 
 
-def test_registry_priority_fits_driver_window():
-    # the driver verifies the first 50 registry entries per round; the
-    # priority list must fill that window EXACTLY (ADVICE r14: at 49
-    # entries the 50th slot silently fell to module registration
-    # order, so the scheduled vintage drain skipped a query)
-    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.registry import (
-        DRIVER_WINDOW,
-        _PRIORITY,
-    )
-
-    assert DRIVER_WINDOW == 50
-    assert len(_PRIORITY) == DRIVER_WINDOW, (
-        f"priority window must fill the driver check set exactly: "
-        f"{len(_PRIORITY)} != {DRIVER_WINDOW}"
-    )
-
 def test_gc_heap_probe_positive_and_bounded(spark):
     # the r4 artifact recorded -18 GB "deltas" across GC boundaries;
     # the replacement probe is retained heap after a forced full GC —
@@ -50,57 +34,99 @@ def test_gc_heap_probe_positive_and_bounded(spark):
     assert 1.0 < live < 130_000.0
 
 
-def test_priority_window_is_ledger_justified():
-    # Round-7 policy (VERDICT r6 "Next round" #1): with all 270
-    # queries driver-attested once, the remaining attestation risk is
-    # rows silently trailing code changes. The ledger ast-diffs every
-    # query function between the commit its last driver row ran
-    # against and the working tree; the window must then be
-    #   (i)  changed-since-row complete: every query whose function
-    #        body changed after its last driver row is IN the window
-    #        (no code edit ships without a scheduled re-attestation),
-    #   (ii) stalest-first monotone: a round-k row may occupy a slot
-    #        only if every older row also has one (changed entries
-    #        aside) — so re-check freshness can never regress, and
-    #   (iii) never-checked complete: a query with no row at all
-    #        always rotates in (vacuous while the registry is frozen
-    #        at 270, load-bearing the moment a query is added).
-    # This test recomputes the ledger live (git + ast, ~8s), so
-    # editing any registry function without rotating it into the
-    # window fails pytest in the same change.
-    import importlib.util
-    import os
+def test_committed_ledger_is_fresh():
+    # The driver checks a prefix of __spark_entry__.queries(), a sort
+    # over the committed ledger, so that file must match a live
+    # recomputation (git + ast, a few seconds): editing a query or a
+    # helper it reaches must regenerate the ledger in the same change.
+    import json
 
-    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.registry import (
-        _PRIORITY,
-        REGISTRY,
-    )
+    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.registry import REGISTRY
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "attestation_ledger", os.path.join(repo, "scripts", "attestation_ledger.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    ledger = mod.build_ledger()
-    assert set(ledger) == set(REGISTRY)
+    mod = _load_script("attestation_ledger")
+    live = mod.build_ledger()
+    with open(mod.LEDGER) as f:
+        committed = json.load(f)["queries"]
 
-    window = set(_PRIORITY)
-    changed = {q for q, e in ledger.items() if e["fn_changed_since_row"]}
-    out_of_window = sorted(changed - window)
-    assert not out_of_window, (
-        f"queries edited after their last driver row but not scheduled "
-        f"for re-attestation: {out_of_window}"
+    def view(ledger):
+        return {q: (e["last_row_round"], e["changed_since_row"]) for q, e in ledger.items()}
+
+    stale = sorted(set(view(live).items()) ^ set(view(committed).items()))
+    assert not stale, (
+        f"results/attestation_ledger.json is stale {stale}; "
+        "regenerate it with: python scripts/attestation_ledger.py"
     )
-    in_rounds = [ledger[q]["last_row_round"] for q in window - changed]
-    out_rounds = [
-        ledger[q]["last_row_round"] for q in set(REGISTRY) - window - changed
-    ]
-    if in_rounds and out_rounds:
-        assert max(in_rounds) <= min(out_rounds), (
-            f"window skips a staler row: includes round {max(in_rounds)} "
-            f"while excluding round {min(out_rounds)}"
-        )
+    assert set(REGISTRY) <= set(live)
+
+
+def test_driver_order_follows_ledger():
+    import json
+
+    import __spark_entry__ as entry
+    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.registry import REGISTRY
+
+    with open(entry.LEDGER) as f:
+        ledger = json.load(f)["queries"]
+    names = list(entry.queries())
+    assert sorted(names) == sorted(REGISTRY)
+    keys = [entry.window_key(n, ledger) for n in names]
+    assert keys == sorted(keys)
+
+
+_HELPERS_SRC = '''"""Helpers."""
+SCALE = 2
+def scaled(x):
+    """Scale x."""
+    return x * SCALE  # doubled
+'''
+
+_OPS_SRC = '''from . import helpers
+from .helpers import scaled
+ORACLE = "SELECT 1"
+def q(spark, sf_dir):
+    """Scaled one."""
+    return scaled(1)
+def r(spark, sf_dir):
+    from .helpers import SCALE
+    return SCALE
+def s(spark, sf_dir):
+    return helpers.scaled(2)
+QUERIES = {"q": (q, ORACLE), "r": (r, None)}
+if True:
+    QUERIES["s"] = (s, None)
+'''
+
+
+def _closure_hashes(ops=_OPS_SRC, helpers=_HELPERS_SRC):
+    sources = {"pkg/__init__.py": "", "pkg/ops.py": ops, "pkg/helpers.py": helpers}
+    pkg = _load_script("attestation_ledger").Package(sources)
+    return {q: pkg.query_hash(q) for q in pkg.roots}
+
+
+def test_closure_hash_follows_helpers_and_oracles_not_prose():
+    base = _closure_hashes()
+    assert set(base) == {"q", "r", "s"}
+
+    # a helper edit reaches its consumers, direct and through module.attr
+    edit = _closure_hashes(helpers=_HELPERS_SRC.replace("x * SCALE", "x + SCALE"))
+    assert edit["q"] != base["q"] and edit["s"] != base["s"]
+    assert edit["r"] == base["r"]
+    # a constant edit reaches through a function-local import
+    edit = _closure_hashes(helpers=_HELPERS_SRC.replace("SCALE = 2", "SCALE = 3"))
+    assert all(edit[q] != base[q] for q in base)
+    # the oracle SQL is part of the entry
+    edit = _closure_hashes(ops=_OPS_SRC.replace("SELECT 1", "SELECT 2"))
+    assert edit["q"] != base["q"]
+    assert edit["r"] == base["r"] and edit["s"] == base["s"]
+
+    # docstring and comment edits change nothing
+    prose = _closure_hashes(
+        ops=_OPS_SRC.replace("Scaled one.", "One, scaled by SCALE."),
+        helpers=_HELPERS_SRC.replace("Scale x.", "Multiply x by SCALE.").replace(
+            "# doubled", "# times SCALE"
+        ),
+    )
+    assert prose == base
 
 
 def test_svg_fallback_renders_valid_artifact(tmp_path):
