@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -32,6 +31,11 @@ from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.session import ge
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
+# Every run writes this gitignored file; the committed
+# results/bench_detail.json is a past round's run, kept as history.
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "results", "bench_detail_run.json"
+)
 
 # Headline set: the reference's five measured ops transposed (read/
 # write/group/sort/to_np, SURVEY.md §6) + the flagship lazy pipeline +
@@ -88,19 +92,12 @@ BENCH_QUERIES = [
     "cusum_changepoint_by_type",  # two-phase prefix-sum change-point
     "link_prediction_common_neighbors",  # wedge-join link prediction
     "ivfpq_ann_topk",           # composed IVF-PQ index (ADC + exact rerank)
-    # round-7 additions: bm25/winnowing/sentence_clean entered
-    # results/bench_rebaseline.json at its commit-3689e65 regeneration;
-    # mapinarrow_matrix_stats did NOT (it joined the suite after that
-    # regeneration ran — ADVICE r8), so until the next calm-window
-    # rebaseline it contributes zero epoch-factor ratios and main()
-    # flags it loudly in bench_detail.json "controls_missing_rebaseline"
+    # round-7 additions
     "bm25_keyword_topk",        # int64 fixed-point BM25 retrieval
     "dedup_winnowing_fingerprints",  # MOSS window-min print dedup
     "dedup_sentence_clean",     # CCNet line-dedup reconstruct
-    "mapinarrow_matrix_stats",  # C1 Arrow-exchange to_np partials (also epoch control)
-    # round-8 additions (no rebaseline entry until its next calm-window
-    # regeneration; the re-measure trigger and drift annotations skip
-    # unknown names)
+    "mapinarrow_matrix_stats",  # C1 Arrow-exchange to_np partials
+    # round-8 additions
     "gopher_repetition_signals",  # Gopher n-gram repetition panel
     "phrase_proximity_topk",    # banded NEAR/k positional retrieval
     "dsir_importance_weights",  # DSIR hashed-bigram micro-nat scores
@@ -112,31 +109,13 @@ BENCH_QUERIES = [
     # round-10 additions
     "dedup_minhash_incremental",  # batch probe vs persisted LSH band index
     "bpe_train_merges",         # unrolled BPE merge loop (3 scan+agg rounds)
-    # round-12 addition (no rebaseline entry until the next
-    # calm-window regeneration; drift annotations skip unknown names).
+    # round-12 addition.
     # bpe_train_merges_delta is deliberately NOT benched: adding both
     # r12 names would push the worst-case contract line past the
     # driver's 2000-char tail (test_contract_line_fits_driver_tail);
     # its perf evidence lives in results/bpe_scale_probe.json instead.
     "ivfpq_ann_topk_bucketed",  # stored bucketBy(list_id) ANN index probe
 ]
-
-# Host-epoch calibration (VERDICT r7 #1). Three rounds running, the
-# round's scariest "regression" was hypervisor noise the judge had to
-# re-prove flat by hand (r5 graph trio, r6 cusum, r7 geo/sort). The
-# fix: time a fixed pair of byte-stable control queries — one pure-JVM
-# shuffle agg (groupby_mean) and one Arrow-exchange op
-# (mapinarrow_matrix_stats), the two noise modes SCALE.md documents —
-# at suite START, MIDDLE, and END. Their drift vs the committed
-# rebaseline is the host-epoch factor for this run; it is committed in
-# bench_detail.json ("epoch") and every benched query's drift is
-# annotated against it ("drift_annotations"): drift <= control drift
-# (x a small margin) is "host", not "regression". The wave re-measure
-# trigger below also scales by the factor so a uniformly slow host
-# doesn't force a futile re-measure of the whole suite.
-EPOCH_CONTROLS = ("groupby_mean", "mapinarrow_matrix_stats")
-EPOCH_CONTROL_REPS = 3
-EPOCH_MARGIN = 1.15  # drift within 15% of the control drift reads as host
 
 
 def _force(df) -> None:
@@ -157,88 +136,10 @@ def _bench_query(qs, spark, name: str, reps: int, warmup: bool, memory_probe=Non
     )
 
 
-def _load_rebaseline() -> dict[str, float]:
-    baseline_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "results", "bench_rebaseline.json"
-    )
-    try:
-        with open(baseline_path) as f:
-            return json.load(f).get("queries", {})
-    except (OSError, json.JSONDecodeError):
-        return {}
-
-
-def _time_epoch_controls(qs, spark) -> dict[str, float]:
-    """Median-of-EPOCH_CONTROL_REPS for each control query (warm —
-    both controls also run inside the main suite, and the suite's own
-    warm-up precedes the first call)."""
-    out: dict[str, float] = {}
-    for name in EPOCH_CONTROLS:
-        try:
-            t = _bench_query(qs, spark, name, EPOCH_CONTROL_REPS, warmup=False)
-            out[name] = round(t.median_s, 4)
-        except Exception as exc:  # noqa: BLE001
-            print(f"  epoch-control {name}: ERROR {exc}", file=sys.stderr)
-    return out
-
-
-def epoch_factor(
-    control_series: dict[str, dict[str, float]], baseline_q: dict[str, float]
-) -> float:
-    """Host-epoch factor: median over (control timing / its rebaseline)
-    across every control x phase sample. 1.0 means the host runs at
-    rebaseline speed; 1.3 means everything — including byte-identical
-    code — reads ~30% slow this window."""
-    ratios = [
-        t / float(baseline_q[name])
-        for phase in control_series.values()
-        for name, t in phase.items()
-        if name in baseline_q and baseline_q[name] and t > 0
-    ]
-    return round(statistics.median(ratios), 4) if ratios else 1.0
-
-
-def drift_annotations(
-    per_query: dict[str, float], baseline_q: dict[str, float], factor: float
-) -> dict[str, dict]:
-    """Classify every benched query's drift vs its rebaseline against
-    the control drift: "host" when the query moved no more than the
-    byte-stable controls did (x EPOCH_MARGIN), "exceeds-epoch" when it
-    moved more — only the latter deserves a per-query post-mortem."""
-    out: dict[str, dict] = {}
-    for name, med in per_query.items():
-        base = baseline_q.get(name)
-        if not base:
-            continue
-        ratio = med / float(base)
-        if ratio <= 1.05:  # at-or-below rebaseline: nothing to explain
-            continue
-        verdict = "host" if ratio <= max(factor, 1.0) * EPOCH_MARGIN else "exceeds-epoch"
-        out[name] = {"ratio": round(ratio, 3), "verdict": verdict}
-    return out
-
-
 def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-    baseline_q = _load_rebaseline()
-
-    # A control without a rebaseline entry contributes ZERO ratios to
-    # the epoch factor — the factor then silently stands on the other
-    # control alone (exactly how the one-legged r8 calibration shipped,
-    # ADVICE r8). Flag it loudly here and in the detail artifact.
-    controls_missing_rebaseline = [
-        c for c in EPOCH_CONTROLS if not baseline_q.get(c)
-    ]
-    if controls_missing_rebaseline:
-        print(
-            "  WARNING: epoch controls missing from bench_rebaseline.json: "
-            f"{controls_missing_rebaseline} — epoch factor is one-legged; "
-            "regenerate the rebaseline (scripts/make_rebaseline.py) in a "
-            "calm window to restore both noise modes",
-            file=sys.stderr,
-        )
 
     # Warm-up pass (H4): JVM/codegen/Arrow init out of the timed region.
     try:
@@ -246,26 +147,11 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001
         print(f"  warm-up: ERROR {exc}", file=sys.stderr)
 
-    # Extra warm-up for the Arrow-exchange control: its first call pays
-    # Python-worker + Arrow-serializer init, which is not host noise.
-    try:
-        _force(qs[EPOCH_CONTROLS[-1]](spark, SF_DIR))
-    except Exception as exc:  # noqa: BLE001
-        print(f"  warm-up(arrow): ERROR {exc}", file=sys.stderr)
-
-    control_series: dict[str, dict[str, float]] = {}
-    control_series["start"] = _time_epoch_controls(qs, spark)
-    print(f"  epoch-control start: {control_series['start']}", file=sys.stderr)
-
     per_query: dict[str, float] = {}
     per_query_spread: dict[str, list[float]] = {}
     per_query_mem: dict[str, dict[str, float]] = {}
     errors: dict[str, str] = {}
-    mid_idx = len(BENCH_QUERIES) // 2
-    for qi, name in enumerate(BENCH_QUERIES):
-        if qi == mid_idx:
-            control_series["mid"] = _time_epoch_controls(qs, spark)
-            print(f"  epoch-control mid: {control_series['mid']}", file=sys.stderr)
+    for name in BENCH_QUERIES:
         # One broken query must cost one row, never the whole artifact
         # (round 3 lost all numbers to a single AnalysisException) —
         # record the error and keep the suite going.
@@ -299,47 +185,6 @@ def main() -> None:
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"  {name}: ERROR {errors[name]}", file=sys.stderr)
 
-    control_series["end"] = _time_epoch_controls(qs, spark)
-    print(f"  epoch-control end: {control_series['end']}", file=sys.stderr)
-    factor = epoch_factor(control_series, baseline_q)
-    print(f"  epoch factor: {factor}", file=sys.stderr)
-
-    # Wave-outlier re-measure pass: the host's multi-minute contention
-    # waves can sit under a whole query's REPS (SCALE.md "Contention-
-    # wave anatomy"), leaving a median 3-10x its quiet-window value.
-    # Any query whose median landed >1.5x its committed rebaseline —
-    # AFTER dividing out the host-epoch factor, so a uniformly slow
-    # window doesn't force a futile re-measure of the whole suite —
-    # gets ONE more median-of-REPS later in the run (waves usually
-    # pass), and the RE-MEASURED median is committed unconditionally —
-    # no min-of-two selection. Round 6 kept the better of the two,
-    # which systematically picked min-of-two-medians for slow queries
-    # while never re-running fast ones, biasing committed totals
-    # downward (ADVICE r6); taking the later window unconditionally
-    # keeps selection out of the committed number while still dodging
-    # a wave that sat under the first window. Both medians land in
-    # bench_detail.json "remeasured" so the swap is auditable
-    # (policy note in SCALE.md). The 1.5x trigger is unchanged from
-    # round 6 (r5's 1.3-2.0x regressions sat under the old 2.5x).
-    remeasured: dict[str, list[float]] = {}
-    suspects = [
-        name
-        for name, med in per_query.items()
-        if name in baseline_q
-        and med > 1.5 * float(baseline_q[name]) * max(factor, 1.0)
-        and med > 0.3
-    ]
-    for name in suspects:
-        try:
-            t = _bench_query(qs, spark, name, REPS, warmup=False)
-            second = round(t.median_s, 4)
-            remeasured[name] = [per_query[name], second]
-            per_query[name] = second
-            per_query_spread[name] = [round(min(t.times_s), 4), round(max(t.times_s), 4)]
-            print(f"  re-measure {name}: {remeasured[name]} -> {per_query[name]:.3f}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001
-            print(f"  re-measure {name}: ERROR {exc}", file=sys.stderr)
-
     sf = float(os.path.basename(SF_DIR.rstrip("/")).removeprefix("sf") or "0.1")
     # Driver contract: ONE compact JSON line on stdout. Rounds 3-4
     # both lost their numbers to this line — r3 to a crash, r4 to
@@ -347,24 +192,9 @@ def main() -> None:
     # driver's tail capture, truncating the head => parsed: null).
     # Everything beyond the contract keys now goes to a detail file.
     detail = {
-        "epoch": {
-            "controls": control_series,
-            "control_rebaseline": {
-                n: baseline_q.get(n) for n in EPOCH_CONTROLS
-            },
-            "controls_missing_rebaseline": controls_missing_rebaseline,
-            "factor": factor,
-            "margin": EPOCH_MARGIN,
-        },
-        # drift vs rebaseline, classified against the control drift:
-        # "host" = moved no more than byte-stable controls did this
-        # window; "exceeds-epoch" = moved more, worth a post-mortem.
-        # Computed on the FINAL (post-re-measure) medians.
-        "drift_annotations": drift_annotations(per_query, baseline_q, factor),
-        # full-precision final medians — the contract line carries only
+        # full-precision medians — the contract line carries only
         # 2 decimals to fit the driver's 2000-char tail capture
         "per_query": per_query,
-        "remeasured": remeasured,
         "spread": per_query_spread,
         "memory": {
             "python_rss_mb": round(memory.python_rss_mb(), 1),
@@ -376,27 +206,11 @@ def main() -> None:
     }
     if errors:
         detail["errors"] = errors
-    # VERDICT r11 #4 (the fourth consecutive round ended with
-    # results/bench_detail.json modified): ordinary runs — including
-    # the driver's per-round run, which sets no env — now write the
-    # gitignored results/bench_detail_run.json, so `python3 bench.py`
-    # on an unchanged tree leaves `git status` clean. The COMMITTED
-    # results/bench_detail.json changes only in intentional re-anchor
-    # commits: set SPARK_GRAFT_BENCH_DETAIL_COMMIT=1 to target it
-    # (reanchor_job.py sets it on its rebaseline runs).
-    detail_name = (
-        "bench_detail.json"
-        if os.environ.get("SPARK_GRAFT_BENCH_DETAIL_COMMIT") == "1"
-        else "bench_detail_run.json"
-    )
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "results", detail_name
-    )
     try:
-        os.makedirs(os.path.dirname(detail_path), exist_ok=True)
-        with open(detail_path, "w") as f:
+        os.makedirs(os.path.dirname(DETAIL_PATH), exist_ok=True)
+        with open(DETAIL_PATH, "w") as f:
             json.dump(detail, f, indent=1)
-        print(f"  detail -> {detail_path}", file=sys.stderr)
+        print(f"  detail -> {DETAIL_PATH}", file=sys.stderr)
     except OSError as exc:
         print(f"  detail write failed: {exc}", file=sys.stderr)
 
@@ -406,8 +220,8 @@ def main() -> None:
 def contract_line(per_query: dict[str, float], sf: float) -> str:
     """The single driver-contract stdout line. Keys are EXACTLY
     {metric, value, unit, queries, sf} — anything more belongs in
-    results/bench_detail.json (round-4's artifact was lost to this
-    line outgrowing the driver's tail capture).
+    the detail file (round-4's artifact was lost to this line
+    outgrowing the driver's tail capture).
 
     LENGTH BUDGET (round-11 fix): the driver keeps only the LAST 2000
     chars of stdout and parses the contract line out of that tail — at
@@ -415,23 +229,15 @@ def contract_line(per_query: dict[str, float], sf: float) -> str:
     BENCH_r09/r10 recorded ``parsed: null`` (the judge had to
     reconstruct numbers from bench_detail.json). Compact separators +
     2-decimal per-query values keep the line ~1850 chars; the full
-    4-decimal medians live in bench_detail.json "per_query".
+    4-decimal medians live in the detail file's "per_query".
     tests/test_harness.py::test_contract_line_fits_driver_tail fails
-    the suite before a suite addition can overflow the budget again.
-
-    SPARK_GRAFT_CONTRACT_PRECISION overrides the per-query precision:
-    the rebaseline jobs (reanchor_job / calm_window_job) set it to 4
-    because make_rebaseline.py mins over these very values — a
-    2-decimal rebaseline would inject up to ~4% error into drift
-    ratios whose alarm margin is 5%. Those jobs read stdout from a
-    pipe, so the driver's 2000-char tail limit does not apply."""
-    prec = int(os.environ.get("SPARK_GRAFT_CONTRACT_PRECISION", "2"))
+    the suite before a suite addition can overflow the budget again."""
     return json.dumps(
         {
             "metric": "total_sec",
             "value": round(sum(per_query.values()), 4),
             "unit": "sec",
-            "queries": {q: round(v, prec) for q, v in per_query.items()},
+            "queries": {q: round(v, 2) for q, v in per_query.items()},
             "sf": sf,
         },
         separators=(",", ":"),

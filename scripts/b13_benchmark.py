@@ -38,9 +38,8 @@ windows vs 7-24 s inside a wave, for the SAME code/config/JVM-flag
 matrix (verified: unaffected by maxRecordsPerBatch, maxBytesPerBatch,
 recompilation-cutoff flags, or -XX:-TieredCompilation — whole trial
 batches flip fast/slow together with the wall clock, the signature of
-external contention). Min-across-fresh-JVMs is the same clean-run
-policy the bench rebaselines use (SCALE.md), and matches the
-reference's one-process-per-engine methodology.
+external contention). Min-across-fresh-JVMs matches the reference's
+one-process-per-engine methodology.
 """
 
 from __future__ import annotations

@@ -169,28 +169,6 @@ def test_bench_contract_line_shape():
     assert parsed["queries"]["q0"] == 0.12
 
 
-def test_rebaseline_jobs_request_full_precision_line(monkeypatch):
-    """make_rebaseline.py mins over the contract line's per-query
-    values; a 2-decimal line would bake ~4% error into a drift
-    machinery whose alarm margin is 5%. Pin both halves: the env
-    override restores 4 decimals, and both rebaseline jobs actually
-    set it when invoking bench.py."""
-    import json
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import bench
-
-    monkeypatch.setenv("SPARK_GRAFT_CONTRACT_PRECISION", "4")
-    parsed = json.loads(bench.contract_line({"q0": 0.1234}, 0.1))
-    assert parsed["queries"]["q0"] == 0.1234
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for job in ("reanchor_job.py", "calm_window_job.py"):
-        src = open(os.path.join(repo, "scripts", job)).read()
-        assert 'SPARK_GRAFT_CONTRACT_PRECISION="4"' in src, job
-
-
 def test_contract_line_fits_driver_tail():
     """The driver keeps only the LAST 2000 chars of stdout and parses
     the contract line out of that tail; BENCH_r09/r10 recorded
@@ -204,14 +182,61 @@ def test_contract_line_fits_driver_tail():
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
+    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import registry
 
-    # worst-case per-query width "99.99" — a 100+s query at sf0.1
-    # would trip the drift machinery long before line length matters
+    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES)), "duplicate bench query"
+    unknown = [q for q in bench.BENCH_QUERIES if q not in registry.REGISTRY]
+    assert not unknown, f"bench suite names unknown queries: {unknown}"
+    # worst-case per-query width "99.99": no benched query comes near
+    # 100 s at sf0.1
     line = bench.contract_line({q: 99.99 for q in bench.BENCH_QUERIES}, 0.1)
     assert len(line) <= 1970, (
         f"contract line worst-case {len(line)}B is within 30B of the "
         "2000B driver tail: trim the bench suite or shrink the format"
     )
+
+
+def test_bench_main_survives_one_failing_query(monkeypatch, capsys, tmp_path):
+    """One query failing costs one row: bench.main still prints the
+    single contract line and records the error in the detail file
+    (no Spark: the session, the timing loop and the probes are stubs)."""
+    import json
+    import os
+    import sys
+    import types
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+
+    bad = bench.BENCH_QUERIES[3]
+
+    def fake_bench_query(qs, spark, name, reps, warmup, memory_probe=None):
+        if name == bad:
+            raise RuntimeError("boom")
+        return timing.OpTiming(
+            operation=name, median_s=0.25, times_s=[0.2, 0.25, 0.3], memory_mb=1.0
+        )
+
+    context = types.SimpleNamespace(setLogLevel=lambda level: None)
+    spark = types.SimpleNamespace(sparkContext=context)
+    monkeypatch.setattr(bench, "get_spark", lambda *args, **kwargs: spark)
+    monkeypatch.setattr(bench, "_bench_query", fake_bench_query)
+    monkeypatch.setattr(bench.memory, "python_rss_mb", lambda: 100.0)
+    monkeypatch.setattr(bench.memory, "jvm_heap_after_gc_mb", lambda spark: 50.0)
+    detail_path = tmp_path / "detail.json"
+    monkeypatch.setattr(bench, "DETAIL_PATH", str(detail_path))
+
+    bench.main()
+
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1
+    parsed = json.loads(lines[0])
+    assert set(parsed) == {"metric", "value", "unit", "queries", "sf"}
+    assert list(parsed["queries"]) == [q for q in bench.BENCH_QUERIES if q != bad]
+    detail = json.loads(detail_path.read_text())
+    assert set(detail) == {"per_query", "spread", "memory", "reps", "sf_dir", "errors"}
+    assert set(detail["errors"]) == {bad}
+    assert "boom" in detail["errors"][bad]
 
 
 def test_committed_bench_detail_matches_committed_bench_round():
@@ -221,8 +246,7 @@ def test_committed_bench_detail_matches_committed_bench_round():
     and it had to land in the round commit alongside BENCH_rN; r11 #4
     retired that — ordinary bench.py runs now write the gitignored
     results/bench_detail_run.json, and the committed detail changes
-    only in intentional re-anchor commits
-    (SPARK_GRAFT_BENCH_DETAIL_COMMIT=1). Pin, restated for that
+    only in intentional re-anchor commits. Pin, restated for that
     policy: the committed detail must be self-consistent with the
     commit that last touched it — if that commit also carries a
     BENCH_r*.json (every round <= 11), each per-query number in the
@@ -292,96 +316,6 @@ def test_committed_bench_detail_matches_committed_bench_round():
             f"{q}: BENCH={v} outside committed detail spread [{lo}, {hi}] — "
             "detail and BENCH artifacts are from different runs"
         )
-
-
-def test_bench_epoch_factor_and_drift_annotations():
-    # VERDICT r7 #1: the host-epoch calibration must (a) read the
-    # control drift as the epoch factor and (b) annotate any query
-    # whose drift <= control drift as "host", not "regression".
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import bench
-
-    baseline = {"groupby_mean": 0.20, "mapinarrow_matrix_stats": 0.40, "sort_asc_rank": 0.56}
-    # controls drifted uniformly +30% across all three phases
-    series = {
-        "start": {"groupby_mean": 0.26, "mapinarrow_matrix_stats": 0.52},
-        "mid": {"groupby_mean": 0.26, "mapinarrow_matrix_stats": 0.52},
-        "end": {"groupby_mean": 0.26, "mapinarrow_matrix_stats": 0.52},
-    }
-    factor = bench.epoch_factor(series, baseline)
-    assert abs(factor - 1.3) < 1e-6
-
-    per_query = {
-        "sort_asc_rank": 0.56 * 1.28,  # moved less than controls -> host
-        "groupby_mean": 0.20 * 1.30,
-        "mapinarrow_matrix_stats": 0.40 * 2.0,  # moved well past controls
-        "unknown_query": 9.9,  # no rebaseline -> no annotation
-    }
-    ann = bench.drift_annotations(per_query, baseline, factor)
-    assert ann["sort_asc_rank"]["verdict"] == "host"
-    assert ann["groupby_mean"]["verdict"] == "host"
-    assert ann["mapinarrow_matrix_stats"]["verdict"] == "exceeds-epoch"
-    assert "unknown_query" not in ann
-
-    # calm host (factor 1.0): a +40% query exceeds the epoch
-    calm = {
-        p: {n: baseline[n] for n in ("groupby_mean", "mapinarrow_matrix_stats")}
-        for p in ("start", "mid", "end")
-    }
-    f2 = bench.epoch_factor(calm, baseline)
-    assert abs(f2 - 1.0) < 1e-6
-    ann2 = bench.drift_annotations({"sort_asc_rank": 0.56 * 1.4}, baseline, f2)
-    assert ann2["sort_asc_rank"]["verdict"] == "exceeds-epoch"
-    # at-or-near rebaseline -> nothing to explain, no annotation row
-    assert not bench.drift_annotations({"sort_asc_rank": 0.56}, baseline, f2)
-    # missing controls -> factor defaults to 1.0, never crashes
-    assert bench.epoch_factor({"start": {}}, baseline) == 1.0
-
-
-def test_bench_epoch_controls_are_benchable():
-    # The calibration contract: both controls must exist in the
-    # registry AND in the bench suite (their per-run timings double as
-    # suite rows), and the drift margin must stay a sane multiplier —
-    # a rename or suite edit that breaks this kills the epoch factor
-    # silently otherwise.
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import bench
-    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import registry
-
-    names = set(registry.REGISTRY)
-    for control in bench.EPOCH_CONTROLS:
-        assert control in names, f"epoch control {control} not in registry"
-        assert control in bench.BENCH_QUERIES, f"epoch control {control} not benched"
-    assert 1.0 < bench.EPOCH_MARGIN < 2.0
-    assert len(bench.BENCH_QUERIES) == len(set(bench.BENCH_QUERIES)), "duplicate bench query"
-    unknown = [q for q in bench.BENCH_QUERIES if q not in names]
-    assert not unknown, f"bench suite names unknown queries: {unknown}"
-    # ADVICE r8: a control missing from the committed rebaseline
-    # contributes zero epoch-factor ratios — exactly the gap that let
-    # the one-legged r8 calibration ship silently. Until the next
-    # calm-window regeneration covers every control, the loud-flag
-    # machinery (bench.main's controls_missing_rebaseline warning +
-    # detail field) must name each gap; once the regeneration lands
-    # this assertion requires presence outright.
-    rebaseline = bench._load_rebaseline()
-    missing = [c for c in bench.EPOCH_CONTROLS if not rebaseline.get(c)]
-    for control in bench.EPOCH_CONTROLS:
-        value = rebaseline.get(control)
-        assert (isinstance(value, (int, float)) and value > 0) or control in missing
-    if missing:
-        # the flag must actually reach the committed artifact source:
-        # bench.py computes it from the same _load_rebaseline() — pin
-        # that the computation can't be skipped by a rename
-        import inspect
-
-        src = inspect.getsource(bench.main)
-        assert "controls_missing_rebaseline" in src
 
 
 def test_executor_peaks_report_real_usage(spark):
