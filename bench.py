@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -136,7 +137,15 @@ def _bench_query(qs, spark, name: str, reps: int, warmup: bool, memory_probe=Non
     )
 
 
+def scale_of(sf_dir: str) -> float | None:
+    """The scale factor in an ``sf<N>`` fixture dir name; None for any
+    other name (e.g. a blown-up copy such as ``/tmp/blowup_x4``)."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
+
+
 def main() -> None:
+    sf = scale_of(SF_DIR)
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
@@ -185,7 +194,6 @@ def main() -> None:
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"  {name}: ERROR {errors[name]}", file=sys.stderr)
 
-    sf = float(os.path.basename(SF_DIR.rstrip("/")).removeprefix("sf") or "0.1")
     # Driver contract: ONE compact JSON line on stdout. Rounds 3-4
     # both lost their numbers to this line — r3 to a crash, r4 to
     # sheer size (spread+memory for 51 queries overflowed the
@@ -217,7 +225,7 @@ def main() -> None:
     print(contract_line(per_query, sf))
 
 
-def contract_line(per_query: dict[str, float], sf: float) -> str:
+def contract_line(per_query: dict[str, float], sf: float | None) -> str:
     """The single driver-contract stdout line. Keys are EXACTLY
     {metric, value, unit, queries, sf} — anything more belongs in
     the detail file (round-4's artifact was lost to this line

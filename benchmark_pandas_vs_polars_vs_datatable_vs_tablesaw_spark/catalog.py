@@ -2,9 +2,15 @@
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings, one parquet file per table under
-``{sf_dir}/``. Parquet carries the schema, so reads are deterministic
-(no inference) and Catalyst gets column pruning + predicate pushdown
-into the scan for free.
+``{sf_dir}/``. Catalyst gets column pruning + predicate pushdown into
+the scan for free.
+
+Parquet carries the schema, but reading it is not free: a plain
+``spark.read.parquet`` fires a Spark job to read the footer on every
+call. :func:`read_parquet` infers each file's schema once per process,
+keyed on the file's identity ``(path, size, mtime_ns)``, and hands it to
+the reader, so building a query over an unchanged file fires no job and
+a rewritten file is re-inferred.
 """
 
 from __future__ import annotations
@@ -31,6 +37,22 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+_SCHEMAS: dict[tuple[str, int, int], T.StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str, identity: str | None = None) -> DataFrame:
+    """``spark.read.schema(s).parquet(path)`` with ``s`` inferred once per
+    identity of the file at ``identity`` (default ``path``; a layout
+    directory passes its ``_SUCCESS`` marker). A rewrite changes the
+    size or mtime, so a stale schema is never served."""
+    st = os.stat(identity or path)
+    key = (os.path.abspath(identity or path), st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
+
+
 def read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Raw parquet read. The events fixture stores TIMESTAMP(NANOS),
     which Spark's reader rejects by default — the legacy nanosAsLong
@@ -40,7 +62,7 @@ def read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -505,14 +505,12 @@ def mapinarrow_matrix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 row[c] = [pc.sum(col, min_count=0).as_py() or 0.0]
             yield pa.RecordBatch.from_pydict(row, schema=pa.schema(fields))
 
-    partial_df = li.select(num_cols).mapInArrow(partials, out_schema)
+    partial_df = li.selectExpr(*num_cols).mapInArrow(partials, out_schema)
     total = partial_df.agg(
-        F.sum("n").alias("n_rows"),
-        *[F.sum(c).alias(c) for c in num_cols],
+        F.expr("sum(n) AS n_rows"), *[F.expr(f"sum({c}) AS {c}") for c in num_cols]
     )
-    return total.select(
-        "n_rows",
-        *[F.round(F.col(c) / F.col("n_rows"), 4).alias(f"{c}_mean") for c in num_cols],
+    return total.selectExpr(
+        "n_rows", *[f"round({c} / n_rows, 4) AS {c}_mean" for c in num_cols]
     )
 
 

@@ -60,11 +60,9 @@ def _corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw text once; at real scale the input has enough splits that this
     coalesces to a no-op under AQE."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
-    trimmed = F.expr("substr(text, 1, length(text) - length(element_at(split(text, ' '), -1)) - 1)")
-    near = (
-        docs.filter((F.col("doc_id") < 25) & (F.size(toks) >= 2))
-        .select((F.col("doc_id") + 1_000_000).alias("doc_id"), trimmed.alias("text"))
+    near = docs.filter("doc_id < 25 AND size(split(text, ' ')) >= 2").selectExpr(
+        "doc_id + 1000000 AS doc_id",
+        "substr(text, 1, length(text) - length(element_at(split(text, ' '), -1)) - 1) AS text",
     )
     return docs.unionByName(near).repartition(spark.sparkContext.defaultParallelism)
 
@@ -186,14 +184,8 @@ def _distinct_shingled(
 ) -> DataFrame:
     """(cols..., <alias>) rows: per-doc DISTINCT word-3-gram shingles
     built from ONE split per row (see _SHINGLES_FROM_TOKS_EXPR)."""
-    return (
-        frame.withColumn("_toks", F.split(F.col("text"), " "))
-        .select(
-            *cols,
-            F.explode(
-                F.expr(f"array_distinct({_SHINGLES_FROM_TOKS_EXPR})")
-            ).alias(alias),
-        )
+    return frame.withColumn("_toks", F.expr("split(text, ' ')")).selectExpr(
+        *cols, f"explode(array_distinct({_SHINGLES_FROM_TOKS_EXPR})) AS {alias}"
     )
 
 
@@ -214,17 +206,13 @@ def minhash_signatures(corpus: DataFrame, n_hashes: int = N_HASHES) -> DataFrame
     shingle 32x inside transform() closures: 7s for 5k docs at sf0.1
     vs ~1s for this one.)
     """
-    hashed = _distinct_shingled(corpus, "s").select(
-        "doc_id", F.expr(f"pmod(xxhash64(s), {MOD})").alias("h")
-    )
-    aggs = [
-        F.min(F.expr(f"pmod({_A[i]}L * h + {_B[i]}L, {MOD})")).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
+    hashed = _distinct_shingled(corpus, "s").selectExpr("doc_id", f"pmod(xxhash64(s), {MOD}) AS h")
+    aggs = [F.expr(f"min(pmod({_A[i]}L * h + {_B[i]}L, {MOD})) AS mh_{i}") for i in range(n_hashes)]
+    signature = ", ".join(f"mh_{i}" for i in range(n_hashes))
     return (
         hashed.groupBy("doc_id")
         .agg(*aggs)
-        .select("doc_id", F.array(*[f"mh_{i}" for i in range(n_hashes)]).alias("signature"))
+        .selectExpr("doc_id", f"array({signature}) AS signature")
     )
 
 
@@ -271,38 +259,30 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-attach joins), so it is persisted MEMORY_AND_DISK — computed
     # once, not three times. At 100 TB the same role is played by
     # writing the signature table to storage once and reading it back.
-    bands = sigs.select(
+    bands = sigs.selectExpr(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {N_BANDS - 1}), b ->"
-                f" struct(b AS band, xxhash64(slice(signature, b * {BAND_ROWS} + 1, {BAND_ROWS})) AS bh))"
-            )
-        ).alias("band"),
-    ).select("doc_id", F.col("band.band").alias("band"), F.col("band.bh").alias("bh"))
+        f"explode(transform(sequence(0, {N_BANDS - 1}), b ->"
+        f" struct(b AS band, xxhash64(slice(signature, b * {BAND_ROWS} + 1, {BAND_ROWS})) AS bh)))"
+        " AS band",
+    ).selectExpr("doc_id", "band.band AS band", "band.bh AS bh")
 
     cand = (
         bands.alias("l")
-        .join(
-            bands.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+        .join(bands.alias("r"), F.expr("l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id"))
+        .selectExpr("l.doc_id AS doc_a", "r.doc_id AS doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
-        .join(sigs.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")), "doc_a")
-        .join(sigs.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b")), "doc_b")
+        .join(sigs.selectExpr("doc_id AS doc_a", "signature AS sig_a"), "doc_a")
+        .join(sigs.selectExpr("doc_id AS doc_b", "signature AS sig_b"), "doc_b")
     )
 
-    est = F.expr(
+    est = (
         "aggregate(zip_with(sig_a, sig_b, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
-        " 0, (acc, v) -> acc + v)"
-    ) / F.lit(N_HASHES)
+        f" 0, (acc, v) -> acc + v) / {N_HASHES}"
+    )
     return (
-        cand.withColumn("est_jaccard", F.round(est, 4))
-        .filter(F.col("est_jaccard") >= 0.5)
-        .select("doc_a", "doc_b", "est_jaccard")
+        cand.withColumn("est_jaccard", F.expr(f"round({est}, 4)"))
+        .filter("est_jaccard >= 0.5D")
+        .selectExpr("doc_a", "doc_b", "est_jaccard")
     )
 
 
@@ -1260,19 +1240,17 @@ def embedding_cosine_pairs(
     # to the inlined form. Persisted: consumed by the bands projection
     # and both re-attach joins.
     corpus = _persist_index(
-        raw_corpus.withColumn("nrm", vectors.norm(F.col("embedding")))
+        raw_corpus.withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
 
-    sig = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                lsh_bucket(
-                    F.col("embedding"), _hyperplanes(dim, n_planes, seed=42 + 1000 * t)
-                ).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
+    buckets = [
+        lsh_bucket("embedding", _hyperplanes(dim, n_planes, seed=42 + 1000 * t))
+        for t in range(n_tables)
+    ]
+    sig = F.expr(
+        "array("
+        + ", ".join(f"struct({t} AS tbl, {b} AS bucket)" for t, b in enumerate(buckets))
+        + ")"
     )
     bands = corpus.select("vec_id", F.explode(sig).alias("s")).select(
         "vec_id", F.col("s.tbl").alias("tbl"), F.col("s.bucket").alias("bucket")
@@ -1303,7 +1281,7 @@ def embedding_cosine_pairs(
         ),
         "vec_b",
     )
-    cos = vectors.dot(F.col("emb_a"), F.col("emb_b")) / (F.col("nrm_a") * F.col("nrm_b"))
+    cos = F.expr(vectors.cosine("emb_a", "emb_b", "nrm_a", "nrm_b"))
     return (
         pairs.withColumn("cos", F.round(cos, 4))
         .filter(F.col("cos") >= threshold)
@@ -1363,7 +1341,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _persist_index(
         emb.unionByName(copies)
         .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     cents = emb.filter(F.col("vec_id") < SEMDEDUP_K).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_vec")
@@ -1397,7 +1375,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "vec_b",
     )
-    cos = vectors.dot(F.col("emb_a"), F.col("emb_b")) / (F.col("nrm_a") * F.col("nrm_b"))
+    cos = F.expr(vectors.cosine("emb_a", "emb_b", "nrm_a", "nrm_b"))
     return (
         pairs.withColumn("cos", F.round(cos, 4))
         .filter(F.col("cos") >= SEMDEDUP_THRESHOLD)

@@ -43,15 +43,12 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize the multimodal fixture: text payload as binary plus a
     media_type derived from the source id (deterministic)."""
     docs = load_table(spark, sf_dir, "documents")
-    media_type = (
-        F.when(F.col("source").isin("src0", "src1", "src2", "src3", "src4", "src5"), "image")
-        .when(F.col("source").isin("src6", "src7", "src8", "src9"), "audio")
-        .otherwise("video")
-    )
-    return docs.select(
+    return docs.selectExpr(
         "doc_id",
-        F.encode("text", "utf-8").alias("payload"),
-        media_type.alias("media_type"),
+        "encode(text, 'utf-8') AS payload",
+        "CASE WHEN source IN ('src0', 'src1', 'src2', 'src3', 'src4', 'src5') THEN 'image'"
+        " WHEN source IN ('src6', 'src7', 'src8', 'src9') THEN 'audio'"
+        " ELSE 'video' END AS media_type",
     )
 
 

@@ -65,16 +65,14 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load_table_parallel(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_vec"),
         F.col("nrm").alias("q_nrm"),
     )
-    cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 4
-    )
+    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
@@ -119,15 +117,17 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]):
-    """Sign-bit bucket id: bit i = 1 iff dot(plane_i, v) > 0."""
-    bucket = F.lit(0).cast("long")
+def lsh_bucket(vec: str, planes: list[list[float]]) -> str:
+    """Sign-bit bucket id as SQL text over the array operand ``vec``:
+    bit i = 1 iff dot(plane_i, vec) > 0. Planes become double literals
+    (``repr`` round-trips each value exactly)."""
+    bucket = "CAST(0 AS BIGINT)"
     for i, plane in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(vectors.dot(arr, vec_col) > 0, F.expr(f"CAST(1 AS LONG) << {i}")).otherwise(
-            F.lit(0).cast("long")
+        arr = "array(" + ", ".join(f"{x!r}D" for x in plane) + ")"
+        bucket = (
+            f"({bucket} + CASE WHEN {vectors.dot(arr, vec)} > 0"
+            f" THEN CAST(1 AS LONG) << {i} ELSE CAST(0 AS BIGINT) END)"
         )
-        bucket = bucket + bit
     return bucket
 
 
@@ -166,17 +166,19 @@ def ann_lsh_topk(
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     dim = 64
     tables = [
         (t, _hyperplanes(dim, n_planes, seed=42 + 1000 * t)) for t in range(n_tables)
     ]
-    sig = F.array(
-        *[
-            F.struct(F.lit(t).alias("tbl"), lsh_bucket(F.col("embedding"), planes).alias("bucket"))
+    sig = F.expr(
+        "array("
+        + ", ".join(
+            f"struct({t} AS tbl, {lsh_bucket('embedding', planes)} AS bucket)"
             for t, planes in tables
-        ]
+        )
+        + ")"
     )
     bucketed = _persist_index(
         emb.select("vec_id", "embedding", "nrm", F.explode(sig).alias("s")).select(
@@ -205,9 +207,7 @@ def ann_lsh_topk(
         .select("q_id", "q_vec", "q_nrm", "vec_id", "embedding", "nrm")
         .dropDuplicates(["q_id", "vec_id"])
     )
-    cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 4
-    )
+    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         cand.withColumn("cos", cos)
@@ -323,14 +323,10 @@ def ivf_ann_topk(
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
-    cents = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + N_CENTROIDS)
-    ).select(
-        (F.col("vec_id") - 100).alias("cent_id"),
-        F.col("embedding").alias("c_vec"),
-        F.col("nrm").alias("c_nrm"),
+    cents = emb.filter(f"vec_id >= 100 AND vec_id < {100 + N_CENTROIDS}").selectExpr(
+        "vec_id - 100 AS cent_id", "embedding AS c_vec", "nrm AS c_nrm"
     )
 
     # assignment pass: every corpus vector -> nearest centroid.
@@ -341,57 +337,48 @@ def ivf_ann_topk(
     # the window form shuffles and sorts all 8N rows. Norms are
     # precomputed per side (not per candidate pair) — sqrt is
     # deterministic, so dot/(nrm*c_nrm) is bit-identical.
-    assign_cos = F.round(
-        vectors.dot(F.col("embedding"), F.col("c_vec")) / (F.col("nrm") * F.col("c_nrm")), 4
-    )
+    assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
     assigned = _persist_index(
         emb.join(F.broadcast(cents), F.lit(True))
         .withColumn("a_cos", assign_cos)
         .groupBy("vec_id")
         .agg(
-            F.max_by(
-                F.struct(F.col("cent_id"), F.col("embedding"), F.col("nrm")),
-                F.struct(F.col("a_cos").alias("c"), (-F.col("cent_id")).alias("t")),
-            ).alias("best")
+            F.expr(
+                "max_by(struct(cent_id, embedding, nrm), struct(a_cos AS c, -cent_id AS t)) AS best"
+            )
         )
-        .select(
-            "vec_id",
-            F.col("best.embedding").alias("embedding"),
-            F.col("best.nrm").alias("nrm"),
-            F.col("best.cent_id").alias("list_id"),
+        .selectExpr(
+            "vec_id", "best.embedding AS embedding", "best.nrm AS nrm", "best.cent_id AS list_id"
         )
     )
 
     # probe pass: each query -> its n_probe nearest centroids
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
+    queries = emb.filter(f"vec_id < {N_QUERIES}").selectExpr(
+        "vec_id AS q_id", "embedding AS q_vec", "nrm AS q_nrm"
     )
-    probe_cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 4
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cent_id").asc())
+    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
     probes = (
         queries.join(F.broadcast(cents), F.lit(True))
         .withColumn("p_cos", probe_cos)
-        .withColumn("p_rank", F.row_number().over(wp))
-        .filter(F.col("p_rank") <= int(n_probe))
-        .select("q_id", "q_vec", "q_nrm", F.col("cent_id").alias("list_id"))
+        .withColumn(
+            "p_rank",
+            F.expr("row_number() OVER (PARTITION BY q_id ORDER BY p_cos DESC, cent_id ASC)"),
+        )
+        .filter(f"p_rank <= {int(n_probe)}")
+        .selectExpr("q_id", "q_vec", "q_nrm", "cent_id AS list_id")
     )
 
     # scan only the probed lists, exact rerank
-    cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 4
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
     return (
         assigned.join(F.broadcast(probes), "list_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
+        .filter("vec_id != q_id")
         .withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rank")
+        .withColumn(
+            "rank", F.expr("row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC)")
+        )
+        .filter(f"rank <= {TOP_K}")
+        .selectExpr("q_id", "vec_id", "cos", "rank")
     )
 
 
@@ -534,9 +521,8 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector column hygiene stats (norm distribution per label) — the
     sanity probe every embedding pipeline runs before indexing."""
     emb = load_table(spark, sf_dir, "embeddings")
-    nrm = vectors.norm(F.col("embedding"))
     return (
-        emb.select("label", F.round(nrm, 4).alias("nrm"))
+        emb.select("label", F.expr(f"round({vectors.norm('embedding')}, 4) AS nrm"))
         .groupBy("label")
         .agg(
             F.count("*").alias("n"),
@@ -583,7 +569,7 @@ def crossmodal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_chars",
         "embedding",
-        vectors.norm(F.col("embedding")).alias("nrm"),
+        F.expr(f"{vectors.norm('embedding')} AS nrm"),
     )
     queries = (
         load_table(spark, sf_dir, "embeddings")
@@ -591,12 +577,10 @@ def crossmodal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("q_id"),
             F.col("embedding").alias("q_vec"),
-            vectors.norm(F.col("embedding")).alias("q_nrm"),
+            F.expr(f"{vectors.norm('embedding')} AS q_nrm"),
         )
     )
-    cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")), 4
-    )
+    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("doc_id").asc())
     return (
         cand.join(F.broadcast(queries), F.col("doc_id") != F.col("q_id"))
@@ -694,7 +678,7 @@ def mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    ip = F.round(vectors.dot(F.col("q_vec"), F.col("embedding")), 4)
+    ip = F.expr(f"round({vectors.dot('q_vec', 'embedding')}, 4)")
     w = Window.partitionBy("q_id").orderBy(F.col("ip").desc(), F.col("vec_id").asc())
     return (
         emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
@@ -1162,7 +1146,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load_table_parallel(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -1170,12 +1154,8 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
     )
     cand = emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-    cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("embedding"))
-        / (F.col("q_nrm") * F.col("nrm")),
-        4,
-    )
-    ip = F.round(vectors.dot(F.col("q_vec"), F.col("embedding")), 4)
+    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
+    ip = F.expr(f"round({vectors.dot('q_vec', 'embedding')}, 4)")
     scored = cand.select("q_id", "vec_id", cos.alias("cos"), ip.alias("ip"))
     w_cos = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     w_ip = Window.partitionBy("q_id").orderBy(F.col("ip").desc(), F.col("vec_id"))
@@ -1459,7 +1439,7 @@ def latesim_rerank_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     cents = emb.filter(
         (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + N_CENTROIDS)
@@ -1468,11 +1448,7 @@ def latesim_rerank_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("c_vec"),
         F.col("nrm").alias("c_nrm"),
     )
-    assign_cos = F.round(
-        vectors.dot(F.col("embedding"), F.col("c_vec"))
-        / (F.col("nrm") * F.col("c_nrm")),
-        4,
-    )
+    assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
     assigned = (
         emb.join(F.broadcast(cents), F.lit(True))
         .withColumn("a_cos", assign_cos)
@@ -1489,10 +1465,7 @@ def latesim_rerank_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_vec"),
         F.col("nrm").alias("q_nrm"),
     )
-    probe_cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-        4,
-    )
+    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
     wp = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cent_id").asc())
     probes = (
         queries.join(F.broadcast(cents), F.lit(True))
@@ -1788,7 +1761,7 @@ def ivfpq_ann_topk(
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     if _ivfpq_should_persist(sf_dir):
         emb = _persist_index(emb)
@@ -1799,11 +1772,7 @@ def ivfpq_ann_topk(
         F.col("embedding").alias("c_vec"),
         F.col("nrm").alias("c_nrm"),
     )
-    assign_cos = F.round(
-        vectors.dot(F.col("embedding"), F.col("c_vec"))
-        / (F.col("nrm") * F.col("c_nrm")),
-        4,
-    )
+    assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
     assigned = (
         emb.join(F.broadcast(cents), F.lit(True))
         .withColumn("a_cos", assign_cos)
@@ -1860,10 +1829,7 @@ def ivfpq_ann_topk(
         F.col("embedding").alias("q_vec"),
         F.col("nrm").alias("q_nrm"),
     )
-    probe_cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-        4,
-    )
+    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
     wp = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cent_id").asc())
     probes = (
         queries.join(F.broadcast(cents), F.lit(True))
@@ -1908,10 +1874,7 @@ def ivfpq_ann_topk(
         approx.withColumn("s_rank", F.row_number().over(ws))
         .filter(F.col("s_rank") <= _PQ_SHORTLIST)
     )
-    cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")),
-        4,
-    )
+    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         shortlist.withColumn("cos", cos)
@@ -2098,14 +2061,10 @@ def _ensure_ivfpq_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
             .repartition(spark.sparkContext.defaultParallelism)
-            .withColumn("nrm", vectors.norm(F.col("embedding")))
+            .withColumn("nrm", F.expr(vectors.norm("embedding")))
         )
         cents = _ivfpq_coarse_cents(emb)
-        assign_cos = F.round(
-            vectors.dot(F.col("embedding"), F.col("c_vec"))
-            / (F.col("nrm") * F.col("c_nrm")),
-            4,
-        )
+        assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
         assigned = (
             emb.join(F.broadcast(cents), F.lit(True))
             .withColumn("a_cos", assign_cos)
@@ -2191,7 +2150,7 @@ def ivfpq_ann_topk_bucketed(
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     cents = _ivfpq_coarse_cents(emb)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
@@ -2199,10 +2158,7 @@ def ivfpq_ann_topk_bucketed(
         F.col("embedding").alias("q_vec"),
         F.col("nrm").alias("q_nrm"),
     )
-    probe_cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-        4,
-    )
+    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
     wp = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cent_id").asc())
     probes = (
         queries.join(F.broadcast(cents), F.lit(True))
@@ -2267,10 +2223,7 @@ def ivfpq_ann_topk_bucketed(
     reranked = fetch.join(F.broadcast(shortlist), "vec_id").join(
         F.broadcast(queries), "q_id"
     )
-    cos = F.round(
-        vectors.dot(F.col("q_vec"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm")),
-        4,
-    )
+    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         reranked.withColumn("cos", cos)
@@ -2315,10 +2268,7 @@ def ivf_within_list_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    cos = F.round(
-        vectors.dot(F.col("embedding"), F.col("emb_b")) / (F.col("nrm") * F.col("nrm_b")),
-        4,
-    )
+    cos = F.expr(f"round({vectors.cosine('embedding', 'emb_b', 'nrm', 'nrm_b')}, 4)")
     return (
         a.hint("merge")
         .join(
@@ -2361,10 +2311,7 @@ def _semdedup_dropped(idx: DataFrame) -> DataFrame:
         F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    cos = F.round(
-        vectors.dot(F.col("embedding"), F.col("emb_b")) / (F.col("nrm") * F.col("nrm_b")),
-        4,
-    )
+    cos = F.expr(f"round({vectors.cosine('embedding', 'emb_b', 'nrm', 'nrm_b')}, 4)")
     return (
         a.hint("merge")
         .join(
@@ -2501,14 +2448,10 @@ def _ensure_ivfpq_multiprobe_table(spark: SparkSession, sf_dir: str) -> DataFram
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
             .repartition(spark.sparkContext.defaultParallelism)
-            .withColumn("nrm", vectors.norm(F.col("embedding")))
+            .withColumn("nrm", F.expr(vectors.norm("embedding")))
         )
         cents = _ivfpq_coarse_cents(emb)
-        a_cos = F.round(
-            vectors.dot(F.col("embedding"), F.col("c_vec"))
-            / (F.col("nrm") * F.col("c_nrm")),
-            4,
-        )
+        a_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
         wa = Window.partitionBy("vec_id").orderBy(
             F.col("a_cos").desc(), F.col("cent_id").asc()
         )
@@ -2571,10 +2514,7 @@ def semdedup_apply_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("emb_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    cos = F.round(
-        vectors.dot(F.col("embedding"), F.col("emb_b")) / (F.col("nrm") * F.col("nrm_b")),
-        4,
-    )
+    cos = F.expr(f"round({vectors.cosine('embedding', 'emb_b', 'nrm', 'nrm_b')}, 4)")
     dropped = (
         a.hint("merge")
         .join(
@@ -2680,14 +2620,10 @@ def semdedup_boundary_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .withColumn("nrm", vectors.norm(F.col("embedding")))
+        .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
     cents = _ivfpq_coarse_cents(emb)
-    a_cos = F.round(
-        vectors.dot(F.col("embedding"), F.col("c_vec"))
-        / (F.col("nrm") * F.col("c_nrm")),
-        4,
-    )
+    a_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
     wa = Window.partitionBy("vec_id").orderBy(F.col("a_cos").desc(), F.col("cent_id").asc())
     asg = (
         emb.join(F.broadcast(cents), F.lit(True))
@@ -2710,9 +2646,7 @@ def semdedup_boundary_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ev"),
         F.col("nrm").alias("nv"),
     )
-    cos = F.round(
-        vectors.dot(F.col("eu"), F.col("ev")) / (F.col("nu") * F.col("nv")), 4
-    )
+    cos = F.expr(f"round({vectors.cosine('eu', 'ev', 'nu', 'nv')}, 4)")
     pairs = (
         u.join(v, F.col("u") < F.col("v"))
         .withColumn("cos", cos)

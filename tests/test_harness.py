@@ -199,7 +199,9 @@ def test_contract_line_fits_driver_tail():
 def test_bench_main_survives_one_failing_query(monkeypatch, capsys, tmp_path):
     """One query failing costs one row: bench.main still prints the
     single contract line and records the error in the detail file
-    (no Spark: the session, the timing loop and the probes are stubs)."""
+    (no Spark: the session, the timing loop and the probes are stubs).
+    A fixture dir not named ``sf<N>`` (a blown-up copy) reports
+    ``"sf": null`` instead of losing the whole run."""
     import json
     import os
     import sys
@@ -226,17 +228,23 @@ def test_bench_main_survives_one_failing_query(monkeypatch, capsys, tmp_path):
     detail_path = tmp_path / "detail.json"
     monkeypatch.setattr(bench, "DETAIL_PATH", str(detail_path))
 
-    bench.main()
+    for sf_dir, sf in (("/data/sf0.01", 0.01), ("/tmp/blowup_x4", None)):
+        monkeypatch.setattr(bench, "SF_DIR", sf_dir)
+        detail_path.unlink(missing_ok=True)
 
-    lines = capsys.readouterr().out.splitlines()
-    assert len(lines) == 1
-    parsed = json.loads(lines[0])
-    assert set(parsed) == {"metric", "value", "unit", "queries", "sf"}
-    assert list(parsed["queries"]) == [q for q in bench.BENCH_QUERIES if q != bad]
-    detail = json.loads(detail_path.read_text())
-    assert set(detail) == {"per_query", "spread", "memory", "reps", "sf_dir", "errors"}
-    assert set(detail["errors"]) == {bad}
-    assert "boom" in detail["errors"][bad]
+        bench.main()
+
+        lines = capsys.readouterr().out.splitlines()
+        assert len(lines) == 1, sf_dir
+        parsed = json.loads(lines[0])
+        assert set(parsed) == {"metric", "value", "unit", "queries", "sf"}
+        assert parsed["sf"] == sf
+        assert list(parsed["queries"]) == [q for q in bench.BENCH_QUERIES if q != bad]
+        detail = json.loads(detail_path.read_text())
+        assert set(detail) == {"per_query", "spread", "memory", "reps", "sf_dir", "errors"}
+        assert detail["sf_dir"] == sf_dir
+        assert set(detail["errors"]) == {bad}
+        assert "boom" in detail["errors"][bad]
 
 
 def test_committed_bench_detail_matches_committed_bench_round():
