@@ -56,7 +56,6 @@ BENCH_QUERIES = [
     "dedup_exact_hash",         # exact dedup
     "dedup_minhash_lsh",        # MinHash LSH near-dup
     "ann_cosine_topk",          # brute-force cosine top-k (expression fold)
-    "ann_cosine_topk_vectorized",  # same semantics, BLAS batch kernel
     "ivf_ann_topk",             # IVF-Flat ANN (probed lists)
     "asof_join_purchase_view",  # as-of join (union-and-carry)
     "text_stats",               # text analysis
@@ -92,30 +91,20 @@ BENCH_QUERIES = [
     "asof_forward_tolerance",   # forward as-of w/ tolerance (conversion lag)
     "cusum_changepoint_by_type",  # two-phase prefix-sum change-point
     "link_prediction_common_neighbors",  # wedge-join link prediction
-    "ivfpq_ann_topk",           # composed IVF-PQ index (ADC + exact rerank)
-    # round-7 additions
     "bm25_keyword_topk",        # int64 fixed-point BM25 retrieval
     "dedup_winnowing_fingerprints",  # MOSS window-min print dedup
     "dedup_sentence_clean",     # CCNet line-dedup reconstruct
     "mapinarrow_matrix_stats",  # C1 Arrow-exchange to_np partials
-    # round-8 additions
     "gopher_repetition_signals",  # Gopher n-gram repetition panel
     "phrase_proximity_topk",    # banded NEAR/k positional retrieval
     "dsir_importance_weights",  # DSIR hashed-bigram micro-nat scores
     "decontaminate_winnowing",  # winnowing-print benchmark decontam
-    # round-9 additions
     "dedup_substring_exact",    # Lee et al. ExactSubstr span dedup
     "gopher_quality_signals",   # Gopher quality panel (zero-shuffle gate)
     "ccnet_perplexity_buckets", # CCNet head/middle/tail LM terciles
-    # round-10 additions
     "dedup_minhash_incremental",  # batch probe vs persisted LSH band index
     "bpe_train_merges",         # unrolled BPE merge loop (3 scan+agg rounds)
-    # round-12 addition.
-    # bpe_train_merges_delta is deliberately NOT benched: adding both
-    # r12 names would push the worst-case contract line past the
-    # driver's 2000-char tail (test_contract_line_fits_driver_tail);
-    # its perf evidence lives in results/bpe_scale_probe.json instead.
-    "ivfpq_ann_topk_bucketed",  # stored bucketBy(list_id) ANN index probe
+    "ivfpq_ann_topk_bucketed",  # IVF-PQ ANN probe of a stored bucketBy(list_id) index
 ]
 
 

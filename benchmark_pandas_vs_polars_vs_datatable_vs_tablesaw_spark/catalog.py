@@ -122,15 +122,7 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     results are partitioning-independent for every caller (per-row
     projections and commutative aggregations only).
     """
-    return scan_parallelism_floor(spark, load_table(spark, sf_dir, name))
-
-
-def scan_parallelism_floor(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """The :func:`load_table_parallel` gate on an already-derived frame
-    (for operators whose heavy per-row work starts from a projection or
-    union of a fixture scan rather than the raw table). Round-robin
-    repartition to ``defaultParallelism``, applied ONLY when the input
-    currently plans fewer partitions than that — a no-op at real scale."""
+    df = load_table(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)

@@ -387,33 +387,17 @@ def groupby_multi_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def groupby_first(spark: SparkSession, sf_dir: str) -> DataFrame:
+def groupby_first_minby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — first row per group *in a defined order* (NB-main:205
     ``groupby(col0).first()``).
 
     pandas/polars/datatable take "first" in current frame order; Spark's
     ``F.first`` is explicitly nondeterministic across partitions, so the
-    correct distributed formulation is a window ``row_number() == 1``
-    over an explicit stable order (SURVEY.md §7.5.1). The window
-    partitions by the group key — one shuffle, same as the groupBy the
-    reference does.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "o_orderstatus")
-    )
-
-
-def groupby_first_minby(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 (alternate) — ``min_by(struct(*), order_col)`` formulation.
-
-    Semantically identical to the window form but executes as a single
-    hash aggregate (partial + final) with NO per-group sort — strictly
-    cheaper at scale when only the first row is needed: the window form
-    shuffles and sorts every row; min_by reduces map-side.
+    deterministic distributed formulation takes the row with the least
+    ``o_orderkey`` per group (SURVEY.md §7.5.1). ``min_by(struct(*),
+    order_col)`` does that as a single hash aggregate (partial + final)
+    with no per-group sort: it reduces map-side, where a window
+    ``row_number() == 1`` would shuffle and sort every row.
     """
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_custkey").agg(
@@ -719,7 +703,6 @@ QUERIES: dict = {
     "median_stats": (median_stats, MEDIAN_ORACLE),
     "matrix_col_means": (matrix_col_means, MATRIX_COL_MEANS_ORACLE),
     "mapinarrow_matrix_stats": (mapinarrow_matrix_stats, MAPINARROW_ORACLE),
-    "groupby_first": (groupby_first, GROUPBY_FIRST_ORACLE),
     "groupby_first_minby": (groupby_first_minby, GROUPBY_FIRST_ORACLE),
     "csv_roundtrip": (
         csv_roundtrip,

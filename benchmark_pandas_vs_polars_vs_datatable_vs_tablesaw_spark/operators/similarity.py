@@ -20,9 +20,6 @@ vec_id tiebreaks, so the exact variant is fully oracle-checked.
 
 from __future__ import annotations
 
-import math
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -56,11 +53,11 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|Q|x|C|xdim) waste. sqrt is deterministic so dot/(nrm*q_nrm)
     is bit-identical to the inlined cosine.
 
-    r14: scan-parallelism floor added (guide §2.5) — the per-candidate
-    dot-product folds were serializing on the single-split scan
-    (interleaved probe min 1.46 s -> 0.96 s at sf0.1). The vectorized
-    BLAS twin keeps the stock scan: its mapInPandas arm measured
-    SLOWER under the floor (Arrow batch fragmentation).
+    The scan reads with a parallelism floor: the per-candidate
+    dot-product folds serialize on a single-split scan otherwise
+    (interleaved probe min 1.46 s -> 0.96 s at sf0.1). The scoring stays
+    a JVM expression fold, so the query has no Python node and no
+    driver-side collect while it is built.
     """
     emb = (
         load_table_parallel(spark, sf_dir, "embeddings")
@@ -613,53 +610,6 @@ ranked AS (
   FROM scored)
 SELECT q_id, doc_id, n_chars, cos, rank FROM ranked WHERE rank <= 5
 """
-
-
-def ann_cosine_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ann_cosine_topk's exact semantics on the vectorized kernel: the
-    corpus streams through mapInPandas as Arrow batches and cosine
-    scores come from one numpy matmul per batch (E @ Q.T in BLAS)
-    instead of the per-row expression fold — measured ~24x faster on
-    the assignment-shaped workload (SCALE.md "Measured headroom",
-    IVF-Flat row), and the SAME DuckDB oracle checks both formulations.
-
-    The query block (10 vectors) collects to the driver and rides the
-    closure — the documented pattern for small broadcast-side dense
-    math; the corpus side never materializes anywhere.
-    """
-    import numpy as np
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q_rows = emb.filter(F.col("vec_id") < N_QUERIES).orderBy("vec_id").collect()
-    Q = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in q_rows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    q_ids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            E = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            En = E / np.linalg.norm(E, axis=1, keepdims=True)
-            cos = En @ Qn.T  # (batch, n_queries)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.repeat(q_ids, n),
-                    "vec_id": np.tile(pdf["vec_id"].to_numpy(), len(q_ids)),
-                    "cos": np.round(cos.T.reshape(-1), 4),
-                }
-            )
-
-    scored = emb.mapInPandas(score, "q_id long, vec_id long, cos double").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
 
 
 def mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1350,7 +1300,7 @@ def latesim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact BRUTE-FORCE baseline (|Q|×|C|×64 subpair dots via one
     map-side-combinable aggregate chain); production narrows |C| with
     the ANN candidates first (ivf/ivfpq) and MaxSim re-scores only the
-    shortlist — the same composition pattern as ivfpq_ann_topk.
+    shortlist — the same composition pattern as ivfpq_ann_topk_bucketed.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     parts = emb.select(
@@ -1671,219 +1621,6 @@ ORDER BY la, lb
 _PQ_SHORTLIST = 50
 _IVFPQ_CENTERS = 16  # 4-bit codes — pq_quantize_stats keeps its 2-bit demo table
 
-# Persist the shared ivfpq input only above this much on-disk
-# embeddings data (VERDICT r7 #4). Both A/B probes measured the cache
-# a net loss below ~1 MB (results/ivfpq_persist_ab{,_within}.json);
-# the crossover is somewhere well below 64 MiB, but 64 MiB is the
-# first size where the 5x recompute (scan + exchange + norm fold per
-# consumer) is unambiguously heavier than one cache build, so the
-# gate errs toward "off" where measurement says off wins.
-_IVFPQ_PERSIST_MIN_BYTES = 64 * 1024 * 1024
-
-
-def _on_disk_bytes(path: str) -> int:
-    """Driver-side size of a parquet file-or-directory — a filesystem
-    stat, never a Spark job; the gate must cost nothing."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fname in files:
-            try:
-                total += os.path.getsize(os.path.join(root, fname))
-            except OSError:
-                pass
-    return total
-
-
-def _ivfpq_should_persist(sf_dir: str) -> bool:
-    """Size gate for the ivfpq shared-input persist (VERDICT r7 #4).
-
-    SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES overrides the threshold (the
-    plan test sets it to 0 to force the gate open at fixture scale).
-    """
-    min_bytes = int(
-        os.environ.get(
-            "SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES", _IVFPQ_PERSIST_MIN_BYTES
-        )
-    )
-    return _on_disk_bytes(os.path.join(sf_dir, "embeddings.parquet")) >= min_bytes
-
-
-def ivfpq_ann_topk(
-    spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE
-) -> DataFrame:
-    """IVF-PQ ANN — the production 100 TB vector-index architecture,
-    composed end-to-end from this module's two halves: the IVF coarse
-    quantizer (probed inverted lists, ivf_ann_topk) and the PQ
-    codebook (pq_quantize_stats). Probed candidates are scored by
-    ASYMMETRIC DISTANCE COMPUTATION: the corpus vector is replaced by
-    its 8 subspace code centers, the query stays exact, and the
-    approximate dot product is a per-(query, subspace, center) lookup
-    — 320 integers broadcast everywhere. The PQ shortlist (top 30 by
-    approximate score) then re-ranks EXACTLY, so the PQ error can only
-    cost recall, never report a wrong score.
-
-    Fully deterministic, fully oracle-checked: the coarse centroids
-    are data-sampled (ivf convention), the PQ codebook is the seeded
-    integer table, and both the codes and the ADC scores are exact
-    int64 arithmetic on e4-quantized coordinates — reduction order
-    cannot move a single candidate across the shortlist boundary.
-
-    At 100 TB: codes are 4 bytes/vector (8 subspaces × 4-bit, vs 256
-    bytes for float32×64) — the whole probed list scans from RAM; the
-    ADC lookup table is built once per query batch; only the
-    ≤ SHORTLIST exact re-rank touches full vectors. Measured PQ-layer
-    quality (tests/test_semantics.py): recalls ≥ 80% of IVF-Flat's
-    top-k from the SAME probe set with this seeded (untrained)
-    codebook on the near-random fixture vectors — a trained codebook
-    drops into the same broadcast table. Probe-set recall itself is
-    the IVF layer's property (SCALE.md known-fixture-artifacts).
-    """
-    # Five consumers read this one input (cents / assigned / dims /
-    # queries / qdims) — without a persist each re-runs the scan, the
-    # repartition exchange, AND the norm fold (r5 plan audit flagged
-    # the recompute; VERDICT r5 "Next round" #4). SIZE-GATED since r8
-    # (VERDICT r7 #4): both A/Bs (results/ivfpq_persist_ab.json and
-    # results/ivfpq_persist_ab_within.json, fresh-JVM and within-JVM
-    # arms) measured the persist
-    # neutral-to-negative at fixture scale — cache build +
-    # InMemoryTableScan overhead >= the 5x recompute it saves on a
-    # <1 MB input — so below _IVFPQ_PERSIST_MIN_BYTES of on-disk
-    # embeddings the input stays unpersisted and the fixture path
-    # pays nothing. Above the gate (any real deployment; 100 TB
-    # embeddings are GBs-to-TBs) the share kicks in, and THAT path
-    # stays structurally pinned: tests/test_plans.py::
-    # test_ivfpq_shares_one_cached_embeddings_scan forces the gate
-    # open via SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES=0 and asserts ONE
-    # parquet scan node with >=5 InMemoryTableScan consumers.
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", F.expr(vectors.norm("embedding")))
-    )
-    if _ivfpq_should_persist(sf_dir):
-        emb = _persist_index(emb)
-    cents = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + N_CENTROIDS)
-    ).select(
-        (F.col("vec_id") - 100).alias("cent_id"),
-        F.col("embedding").alias("c_vec"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
-    assigned = (
-        emb.join(F.broadcast(cents), F.lit(True))
-        .withColumn("a_cos", assign_cos)
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct(F.col("cent_id"), F.col("embedding"), F.col("nrm")),
-                F.struct(F.col("a_cos").alias("c"), (-F.col("cent_id")).alias("t")),
-            ).alias("best")
-        )
-        .select(
-            "vec_id",
-            F.col("best.embedding").alias("embedding"),
-            F.col("best.nrm").alias("nrm"),
-            F.col("best.cent_id").alias("list_id"),
-        )
-    )
-
-    # PQ codebook (pq_quantize_stats' seeded integer table) + codes.
-    centers = spark.range(_PQ_SUBS * _IVFPQ_CENTERS * _PQ_DIMS).select(
-        (F.col("id") / (_IVFPQ_CENTERS * _PQ_DIMS)).cast("int").alias("sub"),
-        ((F.col("id") / _PQ_DIMS).cast("long") % _IVFPQ_CENTERS).alias("center"),
-        (F.col("id") % _PQ_DIMS).alias("j"),
-        (
-            (
-                (F.col("id") / (_IVFPQ_CENTERS * _PQ_DIMS)).cast("long") * 73856093
-                + ((F.col("id") / _PQ_DIMS).cast("long") % _IVFPQ_CENTERS) * 19349663
-                + (F.col("id") % _PQ_DIMS) * 83492791
-            )
-            % 2147483647
-            % 10001
-            - 5000
-        ).alias("ci"),
-    )
-    dims = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim") / _PQ_DIMS).cast("int").alias("sub"),
-        (F.col("dim") % _PQ_DIMS).alias("j"),
-        F.round(F.col("x").cast("double") * 10000).cast("long").alias("xi"),
-    )
-    codes = (
-        dims.join(F.broadcast(centers), ["sub", "j"])
-        .groupBy("vec_id", "sub", "center")
-        .agg(F.sum((F.col("xi") - F.col("ci")) * (F.col("xi") - F.col("ci"))).alias("d2"))
-        .groupBy("vec_id", "sub")
-        .agg(F.min_by("center", F.struct("d2", "center")).alias("code"))
-    )
-
-    # Query side: probes (exact to coarse centroids) + ADC lookup table.
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
-    wp = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cent_id").asc())
-    probes = (
-        queries.join(F.broadcast(cents), F.lit(True))
-        .withColumn("p_cos", probe_cos)
-        .withColumn("p_rank", F.row_number().over(wp))
-        .filter(F.col("p_rank") <= int(n_probe))
-        .select("q_id", "q_vec", "q_nrm", F.col("cent_id").alias("list_id"))
-    )
-    qdims = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.posexplode("embedding").alias("dim", "x"))
-        .select(
-            "q_id",
-            (F.col("dim") / _PQ_DIMS).cast("int").alias("sub"),
-            (F.col("dim") % _PQ_DIMS).alias("j"),
-            F.round(F.col("x").cast("double") * 10000).cast("long").alias("qi"),
-        )
-    )
-    ldot = (
-        qdims.join(F.broadcast(centers), ["sub", "j"])
-        .groupBy("q_id", "sub", "center")
-        .agg(F.sum(F.col("qi") * F.col("ci")).alias("part_dot"))
-    )
-
-    # ADC scoring of probed candidates -> shortlist -> exact re-rank.
-    cand = (
-        assigned.join(F.broadcast(probes), "list_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "q_vec", "q_nrm", "vec_id", "embedding", "nrm")
-    )
-    approx = (
-        cand.join(codes, "vec_id")
-        .join(
-            F.broadcast(ldot.withColumnRenamed("center", "code")),
-            ["q_id", "sub", "code"],
-        )
-        .groupBy("q_id", "q_vec", "q_nrm", "vec_id", "embedding", "nrm")
-        .agg(F.sum("part_dot").alias("adc"))
-    )
-    ws = Window.partitionBy("q_id").orderBy(F.col("adc").desc(), F.col("vec_id").asc())
-    shortlist = (
-        approx.withColumn("s_rank", F.row_number().over(ws))
-        .filter(F.col("s_rank") <= _PQ_SHORTLIST)
-    )
-    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        shortlist.withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
-
-
 def ivfpq_ann_oracle(n_probe: int = N_PROBE) -> str:
     """Oracle template over the shared IVF probe-count dial (VERDICT r8 #6)."""
     return f"""
@@ -1986,11 +1723,10 @@ IVFPQ_ANN_ORACLE = ivfpq_ann_oracle()
 
 
 def _pq_centers_df(spark: SparkSession) -> DataFrame:
-    """The seeded integer PQ codebook as a frame — the identical
-    (sub, center, j, ci) table :func:`ivfpq_ann_topk` builds inline
-    (and pq_quantize_stats' 2-bit cousin); factored for the stored
-    index builder so codes in the bucketed index are byte-identical
-    to the in-session path's."""
+    """The seeded integer PQ codebook as a frame: the (sub, center, j,
+    ci) table the stored index encodes with and the query-side ADC
+    lookup table scores against (pq_quantize_stats keeps a 2-bit
+    cousin)."""
     return spark.range(_PQ_SUBS * _IVFPQ_CENTERS * _PQ_DIMS).select(
         (F.col("id") / (_IVFPQ_CENTERS * _PQ_DIMS)).cast("int").alias("sub"),
         ((F.col("id") / _PQ_DIMS).cast("long") % _IVFPQ_CENTERS).alias("center"),
@@ -2022,13 +1758,12 @@ def _ivfpq_coarse_cents(emb: DataFrame) -> DataFrame:
 
 
 def _ensure_ivfpq_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings corpus as ONE STORED bucketed IVF-PQ index table
-    — VERDICT r11 #1: the r11 MinHash-index pattern
-    (dedup._ensure_minhash_index_tables) applied to similarity search.
-    Persist ≠ index: :func:`ivfpq_ann_topk` recomputes centroid
-    assignments and PQ codes from the embeddings table every session;
-    this table is built ONCE per (sf_dir, fixture fingerprint) and
-    every probe afterwards is pure index reads.
+    """The embeddings corpus as ONE STORED bucketed IVF-PQ index table,
+    the dedup._ensure_minhash_index_tables pattern applied to
+    similarity search. Centroid assignments and PQ codes are computed
+    ONCE per (sf_dir, fixture fingerprint); every probe afterwards, by
+    :func:`ivfpq_ann_topk_bucketed`, :func:`ivf_within_list_nn` or the
+    semdedup queries, is pure index reads.
 
     Layout: (list_id, vec_id, codes array<int>, embedding, nrm),
     bucketBy/sortBy list_id. One table serves both probe stages
@@ -2119,10 +1854,25 @@ def _ensure_ivfpq_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivfpq_ann_topk_bucketed(
     spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE
 ) -> DataFrame:
-    """:func:`ivfpq_ann_topk` with the index as STORED bucketed tables
-    instead of per-session recomputation — the production 100 TB
-    vector-index lifecycle, demonstrated rather than argued (VERDICT
-    r11 #1; the dedup_minhash_incremental_bucketed pattern for ANN).
+    """IVF-PQ ANN — the production 100 TB vector-index architecture,
+    composed from this module's two halves: the IVF coarse quantizer
+    (probed inverted lists, ivf_ann_topk) and the PQ codebook
+    (pq_quantize_stats), with the index STORED as a bucketed table
+    that is built once and reused across queries.
+
+    Probed candidates are scored by ASYMMETRIC DISTANCE COMPUTATION:
+    the corpus vector is replaced by its 8 subspace code centers, the
+    query stays exact, and the approximate dot product is a
+    per-(query, subspace, center) lookup broadcast to the scorer. The
+    PQ shortlist (top ``_PQ_SHORTLIST`` by approximate score) then
+    re-ranks EXACTLY, so the PQ error can only cost recall, never
+    report a wrong score.
+
+    Fully deterministic, fully oracle-checked: the coarse centroids
+    are data-sampled (ivf convention), the PQ codebook is the seeded
+    integer table, and both the codes and the ADC scores are exact
+    int64 arithmetic on e4-quantized coordinates — reduction order
+    cannot move a single candidate across the shortlist boundary.
 
     Probe-side cost is proportional to the QUERY SET, never the
     corpus: the probed centroid ids are collected driver-side (a
@@ -2131,17 +1881,20 @@ def ivfpq_ann_topk_bucketed(
     which both parquet-row-group-prunes and bucket-prunes — the scan
     reads only the probed lists' buckets
     (tests/test_plans.py::test_ivfpq_bucketed_probe_reads_only_probed_buckets asserts
-    SelectedBucketsCount and zero index-side Exchange). ADC scoring
-    then runs on candidates alone (the broadcast lookup-table join of
-    the unstored variant), and the exact re-rank fetches only
-    shortlist vectors from the vec_id-bucketed vector index via an
-    exchange-free merge join on the index side.
+    SelectedBucketsCount and zero index-side Exchange). The exact
+    re-rank fetches only shortlist vectors from the same bucket-pruned
+    index scan.
 
-    Results are IDENTICAL to :func:`ivfpq_ann_topk` (same centroids,
-    same codebook, same int64-exact ADC, same tiebreaks) — one fully
-    deterministic oracle covers both, and
-    tests/test_semantics.py::test_ivfpq_bucketed_equals_unstored pins
-    row-for-row equality."""
+    At 100 TB: codes are 4 bytes/vector (8 subspaces × 4-bit, vs 256
+    bytes for float32×64) — the whole probed list scans from RAM; the
+    ADC lookup table is built once per query batch; only the
+    ≤ SHORTLIST exact re-rank touches full vectors. Measured PQ-layer
+    quality (tests/test_semantics.py): recalls ≥ 80% of IVF-Flat's
+    top-k from the SAME probe set with this seeded (untrained)
+    codebook on the near-random fixture vectors — a trained codebook
+    drops into the same broadcast table. Probe-set recall itself is
+    the IVF layer's property (SCALE.md known-fixture-artifacts).
+    """
     idx = _ensure_ivfpq_index_table(spark, sf_dir)
     # query vectors + coarse centroids come from the SOURCE table —
     # pushed-filter point reads (in production, queries arrive from
@@ -2784,7 +2537,6 @@ QUERIES: dict = {
         embedding_random_projection,
         EMBEDDING_RANDOM_PROJECTION_ORACLE,
     ),
-    "ann_cosine_topk_vectorized": (ann_cosine_topk_vectorized, ANN_TOPK_ORACLE),
     "crossmodal_retrieval": (crossmodal_retrieval, CROSSMODAL_ORACLE),
     "ann_lsh_topk": (ann_lsh_topk, ANN_LSH_ORACLE),
     "mllib_lsh_ann_topk": (mllib_lsh_ann_topk, None),
@@ -2796,7 +2548,6 @@ QUERIES: dict = {
     "kmeans_assign_fixed": (kmeans_assign_fixed, KMEANS_ASSIGN_ORACLE),
     "kmeans_lloyd_two_rounds": (kmeans_lloyd_two_rounds, KMEANS_LLOYD_ORACLE),
     "pq_quantize_stats": (pq_quantize_stats, PQ_QUANTIZE_ORACLE),
-    "ivfpq_ann_topk": (ivfpq_ann_topk, IVFPQ_ANN_ORACLE),
     "ivfpq_ann_topk_bucketed": (ivfpq_ann_topk_bucketed, IVFPQ_ANN_ORACLE),
     "ivf_within_list_nn": (ivf_within_list_nn, IVF_WITHIN_LIST_NN_ORACLE),
     "semdedup_apply": (semdedup_apply, SEMDEDUP_APPLY_ORACLE),

@@ -17,8 +17,6 @@ rounding.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1255,159 +1253,6 @@ def bpe_train_merges_batched(
     return _bpe_merge_rounds_batched(docs, n_merges, batch_k)
 
 
-def _bpe_merge_rounds_delta(
-    docs: DataFrame, n_merges: int, stats: list | None = None
-) -> DataFrame:
-    """Core of :func:`bpe_train_merges_delta` on an arbitrary (text)
-    frame so the property tests can drive hand-built micro corpora.
-    ``stats``, when a list, receives one dict per round
-    ({rank, affected_docs, round_s}) — the instrumentation
-    results/bpe_scale_probe.json records for its round-cost-∝-affected-docs
-    cell; it costs one extra count() per round and is skipped when
-    None (every registry/test path).
-
-    Pair-count state (pair, n) is MAINTAINED BY SIGNED DELTA instead
-    of recounted: merging pair P only changes sequences where P occurs
-    adjacently, so each round (after the one full initial count)
-    touches ONLY the affected slice — subtract its old pair counts,
-    apply the merge to it alone, add its new pair counts, and fold
-    both into the state. Selection (count desc, pair asc over the
-    state) therefore equals the full-recount trainer's exactly —
-    tests/test_property.py pins delta == sequential on the fixture and
-    on hypothesis-generated corpora.
-
-    Each round's new state/corpus is truncated with an EAGER
-    localCheckpoint — the codebase's hard-won rule for every iterative
-    DataFrame loop (see SCALE.md / dedup_clusters_star_contraction):
-    persist() alone caches data but the LOGICAL plan still doubles per
-    round (cur_r references cur_{r-1} twice — the kept slice and the
-    merged slice), so by round ~10 Catalyst re-optimization dominates
-    wall time (measured: depth-12 delta 394 s with persist-only vs
-    flat rounds after the checkpoint swap). At 100 TB both live as
-    stored tables and the affected slice is a partitioned update;
-    per-round cost is ∝ affected docs (results/bpe_scale_probe.json
-    records the affected fraction and the per-round delta-vs-rescan
-    gap).
-    """
-    spark = docs.sparkSession
-    cur = docs.select(F.col("text").alias("seq")).localCheckpoint(eager=True)
-    counts = (
-        cur.select(F.explode(F.expr(_BPE_SEQ_PAIRS_EXPR)).alias("pair"))
-        .groupBy("pair")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    picked: list[tuple[int, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        _t0 = time.perf_counter() if stats is not None else 0.0
-        # TakeOrderedAndProject of the 1-row winner — the same bounded
-        # driver-side step as the batched trainer's candidate list
-        top = counts.orderBy(F.col("n").desc(), F.col("pair").asc()).limit(1).collect()
-        if not top:
-            break  # corpus fully merged
-        pair, n = top[0].pair, int(top[0].n)
-        picked.append((rank, pair, int(n)))
-        if rank == n_merges:
-            break
-        a, b = pair.split(" ")
-        # token-aligned containment: the merge changes a sequence iff
-        # the pair occurs adjacently in it (Column.contains takes the
-        # needle as a literal — no expression inlining)
-        has_pair = F.concat(F.lit(" "), F.col("seq"), F.lit(" ")).contains(
-            f" {a} {b} "
-        )
-        affected = cur.filter(has_pair)
-        new_affected = affected.select(
-            F.expr(_apply_merge_literal_expr(pair)).alias("seq")
-        )
-        # signed deltas aggregate over the AFFECTED slice only — the
-        # round's one data shuffle is delta-sized, never state-sized
-        deltas = (
-            affected.select(
-                F.explode(F.expr(_BPE_SEQ_PAIRS_EXPR)).alias("pair"),
-                F.lit(-1).alias("sign"),
-            )
-            .unionByName(
-                new_affected.select(
-                    F.explode(F.expr(_BPE_SEQ_PAIRS_EXPR)).alias("pair"),
-                    F.lit(1).alias("sign"),
-                )
-            )
-            .groupBy("pair")
-            .agg(F.sum("sign").alias("d"))
-            .filter(F.col("d") != 0)
-        )
-        # fold by FULL OUTER JOIN, not union+re-aggregate: the
-        # persisted state is already hash-partitioned by pair (it is a
-        # groupBy output), so the join plans zero exchange on the
-        # state side — only the tiny delta frame shuffles; a
-        # union+groupBy fold would re-shuffle the whole state every
-        # round (measured 0.57x vs sequential before this fix). The
-        # shuffle_hash hint keeps the fold a hash join — SortMergeJoin
-        # would re-SORT the whole state every round, the same
-        # state-sized cost through a different door.
-        new_counts = (
-            counts.join(deltas.hint("shuffle_hash"), "pair", "full_outer")
-            .select(
-                "pair",
-                (F.coalesce(F.col("n"), F.lit(0)) + F.coalesce(F.col("d"), F.lit(0))).alias("n"),
-            )
-            .filter(F.col("n") > 0)
-            .localCheckpoint(eager=True)
-        )
-        new_cur = (
-            cur.filter(~has_pair)
-            .unionByName(new_affected)
-            .localCheckpoint(eager=True)
-        )
-        if stats is not None:
-            # round_s closes BEFORE the affected count — that count is
-            # instrumentation, not trainer work
-            _round_s = round(time.perf_counter() - _t0, 2)
-            stats.append(
-                {
-                    "rank": rank,
-                    "affected_docs": affected.count(),
-                    "round_s": _round_s,
-                }
-            )
-        # previous generations' checkpoint blocks are released by the
-        # ContextCleaner once dereferenced here (the star-contraction
-        # loop's convention)
-        counts, cur = new_counts, new_cur
-    return spark.createDataFrame(picked, schema="merge_rank INT, pair STRING, n BIGINT")
-
-
-def bpe_train_merges_delta(
-    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
-) -> DataFrame:
-    """BPE training with INCREMENTAL pair-count maintenance (VERDICT
-    r11 #6) — the second real-trainer optimization after batching:
-    :func:`bpe_train_merges` recounts every pair in every sequence
-    each round, but merging pair P can only change sequences where P
-    occurs adjacently, so after one full initial count each round (i)
-    filters the corpus to the affected slice (token-aligned
-    ``contains``), (ii) re-derives pair counts for that slice before
-    and after applying the merge, and (iii) folds the signed deltas
-    into the persisted count state. Selection over the maintained
-    state is provably identical to full recounting (the delta algebra
-    is exact), so the merge table equals the sequential trainer's
-    row-for-row and the SAME oracle covers it.
-
-    Per-round cost: one contains-filter scan of the current corpus +
-    pair extraction over ONLY the affected docs (top merges early in
-    training touch most docs; by mid-vocabulary the affected fraction
-    collapses, which is where real trainers spend their rounds —
-    results/bpe_scale_probe.json's delta cell records the fraction and
-    the per-round gap at 1M docs). The count state is corpus-wide but
-    (pair, n)-shaped — at 100 TB a stored table keyed by pair, with
-    the round's deltas a map-side-combined aggregate over the
-    affected slice only.
-    """
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    return _bpe_merge_rounds_delta(docs, n_merges)
-
-
 # Adaptive trainer policy (VERDICT r12 #5, re-derived twice on
 # probe evidence). The r12 sequential-cells probe suggested "delta
 # loses early"; the r13 interleaved A/B (results/bpe_adaptive_ab.json)
@@ -1434,12 +1279,11 @@ def bpe_train_merges_delta(
 #
 #   STATEFUL phase — one-way switch once winners collapse: the round
 #   opens by checkpointing the merged corpus and rebuilding counts
-#   ONCE from that checkpoint (the delta trainer's initial-count
-#   shape — building state from the lazy chain's plan would execute
-#   the whole chain a second time, the bug the r13 uniform cell
-#   caught at 2.2x delta's cost); every later round folds signed
-#   deltas, with a full-recount escape when a late heavy SPAWNED
-#   pair covers >= recount_frac x docs.
+#   ONCE from that checkpoint (building state from the lazy chain's
+#   plan would execute the whole chain a second time, the bug the r13
+#   uniform cell caught at 2.2x an always-delta trainer's cost); every
+#   later round folds signed deltas, with a full-recount escape when
+#   a late heavy SPAWNED pair covers >= recount_frac x docs.
 #
 # Defaults: delta_frac 0.1 — both 50k-vocab fixtures (winners at
 # 0.0004-2.2% of docs) switch at the first opportunity, while
@@ -1460,19 +1304,33 @@ def _bpe_merge_rounds_adaptive(
     """Core of :func:`bpe_train_merges_adaptive` on an arbitrary
     (text) frame so the property tests can drive hand-built micro
     corpora. ``stats``, when a list, receives one dict per APPLIED
-    round ({rank, path, n, round_s}; path in lazy|delta|recount) for
-    the path-exercise tests (results/bpe_adaptive_ab.json used it too).
+    round ({rank, path, n}; path in lazy|delta|recount) for the
+    path-exercise tests.
 
-    Every mode selects from exact corpus-wide pair counts — the lazy
-    phase recounts from the merged-so-far corpus, the stateful phase
-    maintains the state the delta trainer proves exact — so the merge
-    table equals the sequential trainer's row-for-row for ANY
+    Every mode selects from exact corpus-wide pair counts, so the
+    merge table equals the sequential trainer's row-for-row for ANY
     threshold pair (property-tested across random corpora and random
-    thresholds). Checkpoint discipline: nothing is materialized in
-    the lazy phase (chained literal projections keep the plan
-    linear); from the switch on, every corpus/state generation is
-    truncated with an eager localCheckpoint (the delta trainer's
-    hard-won rule)."""
+    thresholds). The lazy phase recounts from the merged-so-far
+    corpus. The stateful phase MAINTAINS the (pair, n) state by signed
+    delta: merging pair P only changes sequences where P occurs
+    adjacently, so a delta round touches ONLY the affected slice —
+    subtract its old pair counts, apply the merge to it alone, add its
+    new pair counts, and fold both into the state. The delta algebra
+    is exact, so selection (count desc, pair asc over the state)
+    equals the full-recount trainer's.
+
+    Checkpoint discipline: nothing is materialized in the lazy phase
+    (chained literal projections keep the plan linear); from the
+    switch on, every corpus/state generation is truncated with an
+    EAGER localCheckpoint — the codebase's rule for every iterative
+    DataFrame loop (see SCALE.md / dedup_clusters_star_contraction):
+    persist() alone caches data but the LOGICAL plan still doubles per
+    round (cur_r references cur_{r-1} twice — the kept slice and the
+    merged slice), so by round ~10 Catalyst re-optimization dominates
+    wall time (measured: a depth-12 delta loop took 394 s with
+    persist-only vs flat rounds after the checkpoint swap). At 100 TB
+    both live as stored tables and the affected slice is a partitioned
+    update."""
     spark = docs.sparkSession
     cur = docs.select(F.col("text").alias("seq"))
     n_docs = docs.count()
@@ -1481,7 +1339,6 @@ def _bpe_merge_rounds_adaptive(
     prev_n: int | None = None
     counts: DataFrame | None = None
     for rank in range(1, n_merges + 1):
-        _t0 = time.perf_counter() if stats is not None else 0.0
         if not stateful and prev_n is not None and prev_n < delta_frac * n_docs:
             # one-way switch, decided on LAST round's winner weight so
             # this round's selection count doubles as the state build:
@@ -1533,8 +1390,10 @@ def _bpe_merge_rounds_adaptive(
             )
         else:
             path = "delta"
-            # identical to _bpe_merge_rounds_delta's round body
             a, b = pair.split(" ")
+            # token-aligned containment: the merge changes a sequence iff
+            # the pair occurs adjacently in it (Column.contains takes the
+            # needle as a literal — no expression inlining)
             has_pair = F.concat(F.lit(" "), F.col("seq"), F.lit(" ")).contains(
                 f" {a} {b} "
             )
@@ -1542,6 +1401,8 @@ def _bpe_merge_rounds_adaptive(
             new_affected = affected.select(
                 F.expr(_apply_merge_literal_expr(pair)).alias("seq")
             )
+            # signed deltas aggregate over the AFFECTED slice only — the
+            # round's one data shuffle is delta-sized, never state-sized
             deltas = (
                 affected.select(
                     F.explode(F.expr(_BPE_SEQ_PAIRS_EXPR)).alias("pair"),
@@ -1557,6 +1418,14 @@ def _bpe_merge_rounds_adaptive(
                 .agg(F.sum("sign").alias("d"))
                 .filter(F.col("d") != 0)
             )
+            # fold by FULL OUTER JOIN, not union+re-aggregate: the
+            # checkpointed state is already hash-partitioned by pair (it
+            # is a groupBy output), so the join plans zero exchange on
+            # the state side — only the tiny delta frame shuffles; a
+            # union+groupBy fold would re-shuffle the whole state every
+            # round (measured 0.57x vs sequential). The shuffle_hash hint
+            # keeps the fold a hash join — SortMergeJoin would re-SORT
+            # the whole state every round.
             counts = (
                 counts.join(deltas.hint("shuffle_hash"), "pair", "full_outer")
                 .select(
@@ -1580,7 +1449,6 @@ def _bpe_merge_rounds_adaptive(
                     "rank": rank,
                     "path": path,
                     "n": n,
-                    "round_s": round(time.perf_counter() - _t0, 2),
                 }
             )
     return spark.createDataFrame(picked, schema="merge_rank INT, pair STRING, n BIGINT")
@@ -1589,24 +1457,23 @@ def _bpe_merge_rounds_adaptive(
 def bpe_train_merges_adaptive(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ) -> DataFrame:
-    """BPE training with ADAPTIVE pair-count maintenance (VERDICT r12
-    #5) — the hybrid of :func:`bpe_train_merges` (recount every
-    round) and :func:`bpe_train_merges_delta` (signed-delta fold
-    every round): a LAZY phase that recounts over chained literal
-    merge projections while winners are heavy, then a ONE-WAY switch
-    to delta-maintained state once the winner's occurrence count
-    falls below BPE_ADAPTIVE_DELTA_FRAC x docs, with a full-recount
-    escape for late heavy merges (>= BPE_ADAPTIVE_RECOUNT_FRAC x
-    docs). Rationale and measurements: the policy comment above
-    _bpe_merge_rounds_adaptive and the interleaved
-    A/B in results/bpe_adaptive_ab.json (which also exposed the r12
-    "delta loses early" reading as a CacheManager artifact — the
-    sequential trainer's persisted winners were serving later
-    same-session comparisons from cache).
+    """BPE training with ADAPTIVE pair-count maintenance — the
+    real-trainer alternative to :func:`bpe_train_merges`' recount of
+    every pair in every round: a LAZY phase that recounts over chained
+    literal merge projections while winners are heavy, then a ONE-WAY
+    switch to delta-maintained state once the winner's occurrence
+    count falls below BPE_ADAPTIVE_DELTA_FRAC x docs, with a
+    full-recount escape for late heavy merges (>=
+    BPE_ADAPTIVE_RECOUNT_FRAC x docs). Rationale and measurements: the
+    policy comment above _bpe_merge_rounds_adaptive and the
+    interleaved A/B in results/bpe_adaptive_ab.json (which also
+    exposed an earlier "delta loses early" reading as a CacheManager
+    artifact — the sequential trainer's persisted winners were serving
+    later same-session comparisons from cache).
 
     Every phase selects from exact corpus-wide counts, so the merge
     table is identical to the sequential trainer's and the SAME
-    oracle covers all three trainers; property tests sweep random
+    oracle covers both trainers; property tests sweep random
     thresholds against hypothesis corpora. At 100 TB the policy
     reads: while every round must scan most pair mass anyway, do not
     also pay to materialize and maintain vocabulary-scale state; once
@@ -3567,7 +3434,6 @@ QUERIES: dict = {
     "bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_ORACLE),
     "bpe_train_merges": (bpe_train_merges, BPE_TRAIN_MERGES_ORACLE),
     "bpe_train_merges_batched": (bpe_train_merges_batched, BPE_BATCHED_ORACLE),
-    "bpe_train_merges_delta": (bpe_train_merges_delta, BPE_TRAIN_MERGES_ORACLE),
     "bpe_train_merges_adaptive": (bpe_train_merges_adaptive, BPE_TRAIN_MERGES_ORACLE),
     "bpe_encode_corpus": (bpe_encode_corpus, BPE_ENCODE_ORACLE),
     "data_mixture_resample": (data_mixture_resample, DATA_MIXTURE_ORACLE),

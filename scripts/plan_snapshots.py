@@ -61,7 +61,6 @@ SNAPSHOT_QUERIES = [
     "mapinarrow_matrix_stats",
     "dedup_substring_exact",
     "ccnet_perplexity_buckets",
-    "ivfpq_ann_topk",
     "geo_nearest_supplier",
     "triangle_count_copurchase",
     "scd2_priority_history",

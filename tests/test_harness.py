@@ -387,23 +387,38 @@ def test_timing_loop_lives_only_in_harness():
     assert not offenders, offenders
 
 
-def test_ab_archive_arm_imports_under_its_own_name(tmp_path):
+def test_ab_archive_arm_imports_under_its_own_name(tmp_path, monkeypatch):
     """ab.py's base arm: ``git archive HEAD`` of the package imports
-    under a distinct module name and exposes the working tree's query
-    set (no Spark needed — registry import is pure Python)."""
+    under a distinct module name and exposes the committed query set
+    (no Spark needed — registry import is pure Python). HEAD is a
+    throwaway one-commit repo holding the working tree's package, so the
+    check holds while the working tree has uncommitted query changes."""
+    import os
+    import shutil
+    import subprocess
     import sys
 
     from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import registry
 
     ab = _load_script("ab")
+    repo = tmp_path / "repo"
+    shutil.copytree(
+        os.path.join(ab.REPO, ab.PKG), repo / ab.PKG,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    git = ["git", "-C", str(repo), "-c", "user.name=t", "-c", "user.email=t@t"]
+    for args in (["init", "-q"], ["add", "-A"], ["commit", "-q", "-m", "arm"]):
+        subprocess.run(git + args, check=True, capture_output=True)
+    monkeypatch.setattr(ab, "REPO", str(repo))
+    dest = str(tmp_path / "arm")
     try:
-        archived = ab.archived_registry("HEAD", str(tmp_path))
+        archived = ab.archived_registry("HEAD", dest)
         pkg = archived.__name__.split(".")[0]
         assert pkg.startswith("abpkg_") and pkg != ab.PKG
-        assert archived.__file__.startswith(str(tmp_path))
+        assert archived.__file__.startswith(dest)
         assert set(archived.REGISTRY) == set(registry.REGISTRY)
     finally:
-        sys.path.remove(str(tmp_path))
+        sys.path.remove(dest)
         for mod in [m for m in sys.modules if m.startswith("abpkg_")]:
             del sys.modules[mod]
 
@@ -415,3 +430,42 @@ def test_ab_keep_rule_boundary():
     assert ab.keeps(1.15)
     assert not ab.keeps(math.nextafter(1.15, 0.0))
     assert not ab.keeps(1.149)
+
+
+# Registry queries that may share one byte-identical oracle, each group
+# with the reason it stays. Any other shared oracle is a strategy twin:
+# two implementations of one answer, where the loser of a committed A/B
+# should be deleted rather than kept beside the winner.
+SHARED_ORACLE_GROUPS = {
+    # one pipeline through the DataFrame, SQL and SQL-pipe APIs
+    frozenset({"flagship_lazy_pipeline", "sql_api_flagship", "sql_pipe_flagship"}),
+    # one table round-tripped through three storage formats
+    frozenset({"json_roundtrip", "orc_roundtrip", "parquet_zstd_roundtrip"}),
+    # batch vs micro-batch stream over the same events
+    frozenset({"events_hourly_agg", "streaming_hourly_agg"}),
+    frozenset({"events_sliding_window", "streaming_sliding_agg"}),
+    frozenset({"corpus_fingerprint", "streaming_corpus_fingerprint"}),
+    # planted-set recall certificates scored by one planted-pair query
+    frozenset({"dedup_simhash_recall", "streaming_minhash_dedup_recall"}),
+    # open: each wins on a different graph shape (shallow vs high
+    # diameter) and no committed A/B decides between them
+    frozenset({"dedup_clusters_cc", "dedup_clusters_star_contraction"}),
+    # the sequential trainer is the reference the adaptive trainer is
+    # tested against, and bpe_encode_corpus trains with it
+    frozenset({"bpe_train_merges", "bpe_train_merges_adaptive"}),
+}
+
+
+def test_shared_oracles_are_allow_listed():
+    from collections import defaultdict
+
+    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark import registry
+
+    by_sql = defaultdict(set)
+    for name, sql in registry.oracle_sql().items():
+        by_sql[sql].add(name)
+    shared = {frozenset(names) for names in by_sql.values() if len(names) > 1}
+    assert shared == SHARED_ORACLE_GROUPS, (
+        f"unlisted shared oracles {sorted(map(sorted, shared - SHARED_ORACLE_GROUPS))}; "
+        f"stale allow-list groups {sorted(map(sorted, SHARED_ORACLE_GROUPS - shared))}"
+    )

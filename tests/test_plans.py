@@ -401,61 +401,6 @@ def test_bloom_probe_filters_scan_below_semi_join(spark, sf_dir):
     ), "bloom probe must be a scan-side Filter condition, not a join condition"
 
 
-def test_ivfpq_shares_one_cached_embeddings_scan(spark, sf_dir, monkeypatch):
-    """The persist (similarity.py ivfpq_ann_topk) claims its five
-    downstream consumers (cents / assigned / dims / queries / qdims)
-    stopped re-running the scan + repartition exchange + norm fold.
-    Pin it structurally (VERDICT r6 "Next round" #4): the formatted
-    plan must contain exactly ONE distinct `Scan parquet` node —
-    inside the InMemoryRelation definition — and >= 5 distinct
-    InMemoryTableScan consumers reading it. Losing the persist (or
-    CacheManager failing to match the canonical plan) shows up as
-    multiple parquet scan node ids before it shows up as wall-clock.
-
-    Since r8 the persist is SIZE-GATED (VERDICT r7 #4) and off by
-    default at fixture scale; this test forces the gate open (the
-    100 TB posture) by zeroing the threshold."""
-    import re
-
-    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators import similarity
-
-    monkeypatch.setenv("SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES", "0")
-    # A warm CacheManager entry from an earlier test (differential runs
-    # the whole registry first) can swap THIS plan's parquet scan for an
-    # InMemoryTableScan it doesn't own — 0 parquet nodes, spurious fail.
-    # Same reasoning as test_plan_snapshots_top_queries' clearCache().
-    spark.catalog.clearCache()
-    df = similarity.ivfpq_ann_topk(spark, sf_dir)
-    text = explain.plan_text(df, "formatted")
-    parquet_nodes = set(re.findall(r"^\((\d+)\) Scan parquet", text, re.M))
-    cache_nodes = set(re.findall(r"^\((\d+)\) InMemoryTableScan", text, re.M))
-    assert len(parquet_nodes) == 1, (
-        f"expected ONE parquet scan (the cached embeddings read), got "
-        f"node ids {sorted(parquet_nodes)} — the persist is not being shared"
-    )
-    assert len(cache_nodes) >= 5, (
-        f"expected >=5 cache consumers, got {len(cache_nodes)}"
-    )
-
-
-def test_ivfpq_persist_gate_off_at_fixture_scale(spark, sf_dir, monkeypatch):
-    """The flip side of the gate (VERDICT r7 #4): at fixture scale
-    (sub-MB embeddings, where both A/Bs measured the cache a net
-    loss) the DEFAULT path must run unpersisted — no InMemoryRelation
-    anywhere in the plan — so bench.py pays nothing for a share that
-    only wins at real scale."""
-    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators import similarity
-
-    monkeypatch.delenv("SPARK_GRAFT_IVFPQ_PERSIST_MIN_BYTES", raising=False)
-    assert not similarity._ivfpq_should_persist(sf_dir)
-    spark.catalog.clearCache()
-    df = similarity.ivfpq_ann_topk(spark, sf_dir)
-    text = explain.plan_text(df, "formatted")
-    assert "InMemoryTableScan" not in text, (
-        "fixture-scale ivfpq plan should be cache-free (gate default)"
-    )
-
-
 def test_plan_snapshots_top_queries(spark, sf_dir):
     """Committed plan-signature diff for every bench query >= 0.5s in
     the last round's artifact plus ks_drift_test (21 queries, ~60% of

@@ -11,7 +11,7 @@ results, k larger than the table.
 from __future__ import annotations
 
 import duckdb
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -383,10 +383,10 @@ def test_ivfpq_matches_for_any_probe_count(spark, sf_dir, n_probe):
     every probe width, not just the registry's N_PROBE (VERDICT r8 #6)."""
     from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators.similarity import (
         ivfpq_ann_oracle,
-        ivfpq_ann_topk,
+        ivfpq_ann_topk_bucketed,
     )
 
-    got = ivfpq_ann_topk(spark, sf_dir, n_probe=n_probe).toPandas()
+    got = ivfpq_ann_topk_bucketed(spark, sf_dir, n_probe=n_probe).toPandas()
     want = _emb_oracle(sf_dir, ivfpq_ann_oracle(n_probe))
     assert not compare_frames(got, want)
 
@@ -570,83 +570,41 @@ def test_bpe_batched_skips_interacting_candidate(spark):
     assert got == {1: ("a b", 5), 2: ("d e", 3), 3: ("b c", 4)}
 
 
-def test_bpe_delta_equals_sequential_interacting(spark):
-    """Delta-counting must equal full recounting even when a round's
-    winner is a pair SPAWNED by an earlier merge — the case that
-    exercises the positive-delta path. Corpus: 'a b c' x7 + 'b c' x3:
-    round 1 merges 'b c' (count 10), which DESTROYS all 7 'a b'
-    adjacencies (negative delta on an unselected pair — 'a b c'
-    becomes 'a b+c') and SPAWNS 'a b+c' x7, which wins round 2; the
-    corpus is then fully merged, so BOTH trainers stop at rank 2 with
-    no third row."""
-    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators.text import (
-        _bpe_merge_rounds,
-        _bpe_merge_rounds_delta,
-    )
-
-    rows = [("a b c",)] * 7 + [("b c",)] * 3
-    docs = spark.createDataFrame(rows, ["text"])
-    seq = {r.merge_rank: (r.pair, r.n) for r in _bpe_merge_rounds(docs, 3).collect()}
-    dlt = {
-        r.merge_rank: (r.pair, r.n)
-        for r in _bpe_merge_rounds_delta(docs, 3).collect()
-    }
-    assert seq == dlt == {1: ("b c", 10), 2: ("a b+c", 7)}
-
-
-@given(
-    docs=st.lists(
-        st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=1, max_size=6).map(
-            " ".join
-        ),
-        min_size=1,
-        max_size=10,
-    )
-)
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-def test_bpe_delta_equals_sequential_random_corpora(spark, docs):
-    """VERDICT r11 #6 property: on ARBITRARY micro corpora (tiny
-    alphabet => dense pair interactions, spawned pairs, vanishing
-    pairs, fully-merged docs) the delta-maintained trainer and the
-    full-recount sequential trainer must emit identical merge tables —
-    the delta algebra is exact, not approximate."""
-    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators.text import (
-        _bpe_merge_rounds,
-        _bpe_merge_rounds_delta,
-    )
-
-    frame = spark.createDataFrame([(d,) for d in docs], ["text"])
-    seq = sorted(map(tuple, _bpe_merge_rounds(frame, 3).collect()))
-    dlt = sorted(map(tuple, _bpe_merge_rounds_delta(frame, 3).collect()))
-    # exhaustion agrees too: when the corpus fully merges early, the
-    # sequential trainer's remaining rounds emit no rows and delta
-    # breaks out of its loop — both tables end at the same rank
-    assert dlt == seq
-
-
 def test_bpe_adaptive_paths_and_equality(spark):
     """The adaptive trainer (VERDICT r12 #5) must (a) equal the
-    sequential trainer on the interacting corpus of
-    test_bpe_delta_equals_sequential_interacting, and (b) actually
-    take ALL THREE round shapes under engineered thresholds on a
-    corpus built for it — the stats hook records which path each
-    applied round took, so a policy inversion fails loudly rather
-    than degenerating into always-one-mode."""
+    sequential trainer on an interacting corpus, also when its
+    stateful phase folds signed deltas, and (b) actually take ALL
+    THREE round shapes under engineered thresholds on a corpus built
+    for it — the stats hook records which path each applied round
+    took, so a policy inversion fails loudly rather than degenerating
+    into always-one-mode."""
     from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators.text import (
         _bpe_merge_rounds,
         _bpe_merge_rounds_adaptive,
     )
 
-    # (a) exact equality where deltas interact (spawned + destroyed)
+    # (a) exact equality where merges interact. Corpus 'a b c' x7 +
+    # 'b c' x3: round 1 merges 'b c' (count 10), which DESTROYS all 7
+    # 'a b' adjacencies and SPAWNS 'a b+c' x7, which wins round 2; the
+    # corpus is then fully merged, so both trainers stop at rank 2.
     rows = [("a b c",)] * 7 + [("b c",)] * 3
     docs = spark.createDataFrame(rows, ["text"])
     seq = sorted(map(tuple, _bpe_merge_rounds(docs, 3).collect()))
     adp = sorted(map(tuple, _bpe_merge_rounds_adaptive(docs, 3).collect()))
+    assert adp == seq == [(1, "b c", 10), (2, "a b+c", 7)]
+    # the same corpus with the stateful phase opened at round 2 and no
+    # recount escape: the spawned winner is applied by a signed-delta fold
+    stats: list = []
+    adp = sorted(
+        map(
+            tuple,
+            _bpe_merge_rounds_adaptive(
+                docs, 3, delta_frac=10.0, recount_frac=10.0, stats=stats
+            ).collect(),
+        )
+    )
     assert adp == seq
+    assert "delta" in [s["path"] for s in stats]
 
     # (b) corpus: 'x y' in 8/10 docs, 'p q' in 2/10.
     rows = [("x y",)] * 8 + [("p q",)] * 2
@@ -654,7 +612,7 @@ def test_bpe_adaptive_paths_and_equality(spark):
 
     # default fracs (delta_frac 0.1 -> threshold 1 occurrence): both
     # winners stay above it -> the whole run is lazy, no state built
-    stats: list = []
+    stats = []
     got = {
         r.merge_rank: (r.pair, r.n)
         for r in _bpe_merge_rounds_adaptive(docs, 3, stats=stats).collect()
@@ -702,6 +660,7 @@ def test_bpe_adaptive_paths_and_equality(spark):
     delta_frac=st.sampled_from([0.0, 0.3, 0.7, 10.0]),
     recount_frac=st.sampled_from([0.0, 0.5, 10.0]),
 )
+@example(docs=["a b c"] * 7 + ["b c"] * 3, delta_frac=10.0, recount_frac=10.0)
 @settings(
     max_examples=10,
     deadline=None,
