@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import shipping
 from ..catalog import load_table
 from .core import global_rank
 
@@ -534,6 +535,7 @@ def _zscore_pdf(pdf):
     """Grouped-map kernel: per-group z-score, vectorized numpy inside
     one Arrow batch per group (module-level so workers re-import it by
     name — see shipping.py)."""
+    shipping.prepare_worker()
     m = pdf["l_quantity"].mean()
     s = pdf["l_quantity"].std(ddof=1)
     out = pdf[["l_orderkey", "l_linenumber", "l_returnflag"]].copy()

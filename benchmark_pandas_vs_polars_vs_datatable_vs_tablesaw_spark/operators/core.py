@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import shipping
 from ..catalog import load_table
 from ..functions import scalars
 from ..sources import csv_io, generators
@@ -480,6 +481,7 @@ def mapinarrow_matrix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def partials(batches):
+        shipping.prepare_worker()
         import pyarrow.compute as pc
 
         for batch in batches:

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import shipping
 from ..catalog import load_table
 
 DECODE_SCHEMA = (
@@ -76,6 +77,7 @@ def decode_media(media: DataFrame) -> DataFrame:
     with the scan; each task decodes only its own partition's rows."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        shipping.prepare_worker()
         for batch in batches:
             yield _fake_decode(batch)
 
@@ -114,6 +116,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = media_table(spark, sf_dir)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        shipping.prepare_worker()
         for batch in batches:
             b = _fake_decode(batch)
             factor = (
@@ -198,6 +201,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     import numpy as np
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        shipping.prepare_worker()
         for batch in batches:
             n = batch["payload"].map(len).to_numpy(dtype=np.int64)
             j = np.arange(8, dtype=np.int64)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import shipping
 from ..catalog import load_table, load_table_parallel
 from .dedup import _SHINGLES_SQL, _distinct_shingled
 
@@ -302,6 +303,7 @@ def pandas_udf_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @pandas_udf("long")
     def score(lengths, n_tokens):
+        shipping.prepare_worker()
         return _doc_score_kernel(lengths, n_tokens)
 
     docs = load_table(spark, sf_dir, "documents")
