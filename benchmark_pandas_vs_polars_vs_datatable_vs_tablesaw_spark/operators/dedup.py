@@ -217,22 +217,19 @@ def minhash_signatures(corpus: DataFrame, n_hashes: int = N_HASHES) -> DataFrame
 
 
 def _persist_index(df: DataFrame) -> DataFrame:
-    """Persist a dedup index structure (MinHash signatures, SimHash
-    bands, shingle postings).
+    """Persist an index structure (MinHash signatures, SimHash bands,
+    shingle postings, the LSH bucket table, IVF inverted lists).
 
     Spark's CacheManager keys on the canonical plan, so repeated
     invocations over the same sf_dir share ONE cache entry — the index
     is computed once and every later run (and every self-join side)
     reuses it, exactly the build-once/query-often lifecycle of a real
-    dedup index. MEMORY_AND_DISK bounds memory (LRU-evicts / spills
+    index. MEMORY_AND_DISK bounds memory (LRU-evicts / spills
     under pressure); at 100 TB the same role is a stored table.
     """
     from pyspark import StorageLevel
 
     return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-_persist_sigs = _persist_index
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,7 +246,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     version of the same pipeline.
     """
     corpus = _corpus_with_near_dups(spark, sf_dir)
-    sigs = _persist_sigs(minhash_signatures(corpus))
+    sigs = _persist_index(minhash_signatures(corpus))
 
     # Bands carry only (doc_id, band, bh) — 3 longs/row — through the
     # candidate join; the 32-long signatures are re-attached to the
@@ -337,9 +334,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _corpus_with_near_dups(spark, sf_dir)
     fps = simhash_fingerprints(corpus)
     # Self-joined below (l and r both scan it): persist so the 64-vote
-    # fingerprint aggregation runs once, not once per join side — the
-    # same build-once index lifecycle as _persist_sigs (cache keyed on
-    # canonical plan, shared across invocations, spills under pressure).
+    # fingerprint aggregation runs once, not once per join side (cache
+    # keyed on canonical plan, shared across invocations).
     bands = _persist_index(fps.select(
         "doc_id",
         "simhash",

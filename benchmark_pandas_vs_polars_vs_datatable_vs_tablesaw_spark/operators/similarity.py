@@ -25,22 +25,39 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_parallel
 from ..functions import vectors
+from .dedup import _persist_index
 
 N_QUERIES = 10
 TOP_K = 5
 
 
-def _persist_index(df: DataFrame) -> DataFrame:
-    """Persist an ANN index structure (LSH bucket table / IVF inverted
-    lists). CacheManager keys on the canonical plan, so every
-    invocation over the same sf_dir shares one cache entry — the index
-    builds once and queries reuse it, the build-once/query-often
-    lifecycle of a real vector index. MEMORY_AND_DISK spills under
-    pressure; at 100 TB the same role is a bucketed/partitioned table
-    on storage."""
-    from pyspark import StorageLevel
+def _cos4(a: str, b: str, norm_a: str, norm_b: str) -> str:
+    """The 4-dp cosine every operator here ranks on, as SQL text over
+    two array operands and their precomputed norms. Rounding before
+    ranking with explicit id tiebreaks makes rank order engine-portable."""
+    return f"round({vectors.cosine(a, b, norm_a, norm_b)}, 4)"
 
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+def _query_frame(emb: DataFrame, *extra: str, nrm: bool = True) -> DataFrame:
+    """The query set of every top-k operator here: the first N_QUERIES
+    corpus vectors as (q_id, q_vec, q_nrm, *extra). ``emb`` is an
+    embeddings frame carrying ``nrm`` unless ``nrm=False``."""
+    cols = ["vec_id AS q_id", "embedding AS q_vec", *(["nrm AS q_nrm"] if nrm else []), *extra]
+    return emb.filter(f"vec_id < {N_QUERIES}").selectExpr(*cols)
+
+
+def _cosine_topk(cand: DataFrame) -> DataFrame:
+    """The exact rerank tail of every cosine top-k operator here: score
+    each candidate row (q_id, q_vec, q_nrm, vec_id, embedding, nrm) by
+    4-dp cosine and keep each query's TOP_K by (cos DESC, vec_id ASC)."""
+    return (
+        cand.withColumn("cos", F.expr(_cos4("q_vec", "embedding", "q_nrm", "nrm")))
+        .withColumn(
+            "rank", F.expr("row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC)")
+        )
+        .filter(f"rank <= {TOP_K}")
+        .selectExpr("q_id", "vec_id", "cos", "rank")
+    )
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,20 +81,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    return _cosine_topk(emb.join(F.broadcast(_query_frame(emb)), F.col("vec_id") != F.col("q_id")))
 
 
 ANN_TOPK_ORACLE = f"""
@@ -187,13 +191,7 @@ def ann_lsh_topk(
         )
     )
 
-    queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("tbl").alias("q_tbl"),
-        F.col("bucket").alias("q_bucket"),
-    )
+    queries = _query_frame(bucketed, "tbl AS q_tbl", "bucket AS q_bucket")
     cand = (
         bucketed.join(
             F.broadcast(queries),
@@ -204,14 +202,7 @@ def ann_lsh_topk(
         .select("q_id", "q_vec", "q_nrm", "vec_id", "embedding", "nrm")
         .dropDuplicates(["q_id", "vec_id"])
     )
-    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rank")
-    )
+    return _cosine_topk(cand)
 
 
 def _lsh_oracle_sql(dim: int = 64) -> str:
@@ -290,28 +281,104 @@ N_CENTROIDS = 8
 N_PROBE = 2
 
 
+# --------------------------------------------------------------------------
+# The IVF coarse quantizer, shared by every IVF operator here
+# --------------------------------------------------------------------------
+
+
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
+    """Coarse-quantizer centroids from an embeddings frame (vec_id,
+    embedding, nrm) as (cent_id, c_vec, c_nrm): the data-sampled
+    vectors vec_id 100..100+N_CENTROIDS. Sampled rather than k-means
+    centroids, so the whole scheme is deterministic and fully
+    DuckDB-oracle-checked (k-means centroids would depend on float
+    iteration order). At 100 TB the centroids come from a sampled
+    k-means job and drop into the same broadcast."""
+    return emb.filter(f"vec_id >= 100 AND vec_id < {100 + N_CENTROIDS}").selectExpr(
+        "vec_id - 100 AS cent_id", "embedding AS c_vec", "nrm AS c_nrm"
+    )
+
+
+def _centroid_scores(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """Every corpus vector against every broadcast centroid, scored
+    ``a_cos``. Norms are precomputed per side, not per pair: sqrt is
+    deterministic, so dot/(nrm*c_nrm) is bit-identical."""
+    return emb.join(F.broadcast(cents), F.lit(True)).withColumn(
+        "a_cos", F.expr(_cos4("embedding", "c_vec", "nrm", "c_nrm"))
+    )
+
+
+def _ivf_assign(emb: DataFrame, cents: DataFrame, *carry: str) -> DataFrame:
+    """The assignment pass: every corpus vector to its nearest centroid
+    (a_cos DESC, cent_id ASC) as (vec_id, *carry, list_id); ``carry``
+    names ``emb`` columns to keep alongside.
+
+    max_by over an ordering struct (cos DESC, cent_id ASC via negation)
+    instead of a row_number window: the N_CENTROIDS candidate rows per
+    vector collapse map-side in the partial aggregate, so the shuffle
+    carries one row per vector and nothing is ever sorted. This pass is
+    Θ(N·nlist) and the place a scalable assignment would replace."""
+    if carry:
+        value, alias = f"struct(cent_id, {', '.join(carry)})", "best"
+    else:
+        value, alias = "cent_id", "list_id"
+    lists = _centroid_scores(emb, cents).groupBy("vec_id").agg(
+        F.expr(f"max_by({value}, struct(a_cos AS c, -cent_id AS t)) AS {alias}")
+    )
+    if not carry:
+        return lists
+    return lists.selectExpr(
+        "vec_id", *(f"best.{c} AS {c}" for c in carry), "best.cent_id AS list_id"
+    )
+
+
+def _ivf_top2(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """Each vector's two nearest lists, one row each, ranked ``a_rank``
+    1 and 2 in assignment order (rank 1 is :func:`_ivf_assign`'s list).
+    The soft (multi-assignment) IVF membership: max_by cannot express
+    "second best", so this ranks with a window and shuffles all
+    N·nlist scored rows once."""
+    return (
+        _centroid_scores(emb, cents)
+        .withColumn(
+            "a_rank",
+            F.expr("row_number() OVER (PARTITION BY vec_id ORDER BY a_cos DESC, cent_id ASC)"),
+        )
+        .filter("a_rank <= 2")
+    )
+
+
+def _ivf_probes(queries: DataFrame, cents: DataFrame, n_probe: int, *keep: str) -> DataFrame:
+    """Each query's ``n_probe`` nearest lists (p_cos DESC, cent_id
+    ASC) as (q_id, *keep, list_id), ``queries`` being a
+    :func:`_query_frame`. n_probe is the recall/cost dial of every IVF
+    index; n_probe = N_CENTROIDS degenerates to exact search."""
+    return (
+        queries.join(F.broadcast(cents), F.lit(True))
+        .withColumn("p_cos", F.expr(_cos4("q_vec", "c_vec", "q_nrm", "c_nrm")))
+        .withColumn(
+            "p_rank",
+            F.expr("row_number() OVER (PARTITION BY q_id ORDER BY p_cos DESC, cent_id ASC)"),
+        )
+        .filter(f"p_rank <= {int(n_probe)}")
+        .selectExpr("q_id", *keep, "cent_id AS list_id")
+    )
+
+
 def ivf_ann_topk(
     spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE
 ) -> DataFrame:
     """IVF-Flat ANN: corpus partitioned into inverted lists by nearest
     centroid; queries probe the n_probe nearest lists and rerank
-    exactly within them. n_probe is THE recall/cost dial of every IVF
-    index (n_probe = N_CENTROIDS degenerates to exact brute force);
-    property-swept across the full range in tests/test_property.py
-    (VERDICT r8 #6).
+    exactly within them. The probe-count dial is property-swept across
+    its full range in tests/test_property.py.
 
-    Centroids are data-sampled (vec_id 100..107) so the whole scheme
-    is deterministic and fully DuckDB-oracle-checked — unlike k-means
-    centroids, which would be float-iteration-order dependent. At
-    100 TB: centroids come from a sampled k-means job, the assignment
-    pass writes the corpus bucketed/partitioned BY list_id (one-time
-    cost), and each query then scans only nprobe/nlist of the data —
-    this query demonstrates exactly that read path, with both the
-    assignment join and the probe join broadcast (centroids and
-    queries are small by construction).
-
-    Scoring rounds to 4 dp before ranking with explicit tiebreaks, so
-    rank order is engine-portable (same convention as ann_cosine_topk).
+    At 100 TB the assignment pass writes the corpus bucketed or
+    partitioned BY list_id (a one-time cost; the stored IVF-PQ index
+    below is that layout), and each query then scans only
+    nprobe/nlist of the data. This query demonstrates that read path,
+    with both the assignment join and the probe join broadcast
+    (centroids and queries are small by construction).
     """
     # repartition: the single-file fixture parquet yields 2 input
     # splits, which would serialize the 64-dim cosine assignment pass
@@ -322,61 +389,11 @@ def ivf_ann_topk(
         .repartition(spark.sparkContext.defaultParallelism)
         .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
-    cents = emb.filter(f"vec_id >= 100 AND vec_id < {100 + N_CENTROIDS}").selectExpr(
-        "vec_id - 100 AS cent_id", "embedding AS c_vec", "nrm AS c_nrm"
-    )
-
-    # assignment pass: every corpus vector -> nearest centroid.
-    # max_by over an ordering struct (cos DESC, cent_id ASC via
-    # negation) instead of a row_number window: the 8 candidate rows
-    # per vector collapse map-side in the partial aggregate, so the
-    # shuffle carries one row per vector and nothing is ever sorted —
-    # the window form shuffles and sorts all 8N rows. Norms are
-    # precomputed per side (not per candidate pair) — sqrt is
-    # deterministic, so dot/(nrm*c_nrm) is bit-identical.
-    assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
-    assigned = _persist_index(
-        emb.join(F.broadcast(cents), F.lit(True))
-        .withColumn("a_cos", assign_cos)
-        .groupBy("vec_id")
-        .agg(
-            F.expr(
-                "max_by(struct(cent_id, embedding, nrm), struct(a_cos AS c, -cent_id AS t)) AS best"
-            )
-        )
-        .selectExpr(
-            "vec_id", "best.embedding AS embedding", "best.nrm AS nrm", "best.cent_id AS list_id"
-        )
-    )
-
-    # probe pass: each query -> its n_probe nearest centroids
-    queries = emb.filter(f"vec_id < {N_QUERIES}").selectExpr(
-        "vec_id AS q_id", "embedding AS q_vec", "nrm AS q_nrm"
-    )
-    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
-    probes = (
-        queries.join(F.broadcast(cents), F.lit(True))
-        .withColumn("p_cos", probe_cos)
-        .withColumn(
-            "p_rank",
-            F.expr("row_number() OVER (PARTITION BY q_id ORDER BY p_cos DESC, cent_id ASC)"),
-        )
-        .filter(f"p_rank <= {int(n_probe)}")
-        .selectExpr("q_id", "q_vec", "q_nrm", "cent_id AS list_id")
-    )
-
+    cents = _ivf_centroids(emb)
+    assigned = _persist_index(_ivf_assign(emb, cents, "embedding", "nrm"))
+    probes = _ivf_probes(_query_frame(emb), cents, n_probe, "q_vec", "q_nrm")
     # scan only the probed lists, exact rerank
-    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
-    return (
-        assigned.join(F.broadcast(probes), "list_id")
-        .filter("vec_id != q_id")
-        .withColumn("cos", cos)
-        .withColumn(
-            "rank", F.expr("row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id ASC)")
-        )
-        .filter(f"rank <= {TOP_K}")
-        .selectExpr("q_id", "vec_id", "cos", "rank")
-    )
+    return _cosine_topk(assigned.join(F.broadcast(probes), "list_id").filter("vec_id != q_id"))
 
 
 _COS_SQL = """
@@ -388,7 +405,7 @@ round(
 """
 
 def ivf_ann_oracle(n_probe: int = N_PROBE) -> str:
-    """Oracle template over the probe-count dial (VERDICT r8 #6)."""
+    """Oracle template over the probe-count dial."""
     return f"""
 WITH cents AS (
   SELECT vec_id - 100 AS cent_id, embedding AS c_vec
@@ -577,7 +594,7 @@ def crossmodal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"{vectors.norm('embedding')} AS q_nrm"),
         )
     )
-    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
+    cos = F.expr(_cos4("q_vec", "embedding", "q_nrm", "nrm"))
     w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("doc_id").asc())
     return (
         cand.join(F.broadcast(queries), F.col("doc_id") != F.col("q_id"))
@@ -625,9 +642,7 @@ def mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     all — MIPS is one fold per (query, candidate).
     """
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _query_frame(emb, nrm=False)
     ip = F.expr(f"round({vectors.dot('q_vec', 'embedding')}, 4)")
     w = Window.partitionBy("q_id").orderBy(F.col("ip").desc(), F.col("vec_id").asc())
     return (
@@ -1089,22 +1104,17 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     In production the two inputs would be the outputs of any two ANN
     indexes (IVF, LSH, BM25); the fusion stage is identical.
 
-    r14: scan-parallelism floor added (guide §2.5) — the per-candidate
-    dot-product folds were serializing on the single-split scan;
-    measured 1.7x at sf0.1 (results/scan_floor_ab.json).
+    The scan reads with a parallelism floor: the per-candidate
+    dot-product folds serialize on the single-split scan otherwise
+    (1.7x at sf0.1, results/scan_floor_ab.json).
     """
     emb = (
         load_table_parallel(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cand = emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
+    cand = emb.join(F.broadcast(_query_frame(emb)), F.col("vec_id") != F.col("q_id"))
+    cos = F.expr(_cos4("q_vec", "embedding", "q_nrm", "nrm"))
     ip = F.expr(f"round({vectors.dot('q_vec', 'embedding')}, 4)")
     scored = cand.select("q_id", "vec_id", cos.alias("cos"), ip.alias("ip"))
     w_cos = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
@@ -1183,6 +1193,43 @@ _PQ_DIMS = 8
 _PQ_CENTERS = 4
 
 
+def _e4_parts(
+    df: DataFrame, key: str = "vec_id", vec: str = "embedding", xi: str = "xi"
+) -> DataFrame:
+    """``vec`` cut into _PQ_DIMS-wide subvectors, one row per element:
+    (key, sub, j, xi) with the element quantized to an e4 int64, so every
+    subvector dot or distance built on it is exact integer arithmetic."""
+    return df.selectExpr(key, f"posexplode({vec}) AS (dim, x)").selectExpr(
+        key,
+        f"CAST(dim / {_PQ_DIMS} AS INT) AS sub",
+        f"dim % {_PQ_DIMS} AS j",
+        f"CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT) AS {xi}",
+    )
+
+
+def _pq_centers_df(spark: SparkSession, n_centers: int) -> DataFrame:
+    """A seeded integer PQ codebook of ``n_centers`` centers per
+    subspace as a (sub, center, j, ci) frame: pq_quantize_stats keeps a
+    2-bit demo table, the stored IVF-PQ index encodes with 4 bits and
+    its query-side ADC lookup table scores against the same codebook.
+    Trained centroids drop in as the same broadcast."""
+    return spark.range(_PQ_SUBS * n_centers * _PQ_DIMS).select(
+        (F.col("id") / (n_centers * _PQ_DIMS)).cast("int").alias("sub"),
+        ((F.col("id") / _PQ_DIMS).cast("long") % n_centers).alias("center"),
+        (F.col("id") % _PQ_DIMS).alias("j"),
+        (
+            (
+                (F.col("id") / (n_centers * _PQ_DIMS)).cast("long") * 73856093
+                + ((F.col("id") / _PQ_DIMS).cast("long") % n_centers) * 19349663
+                + (F.col("id") % _PQ_DIMS) * 83492791
+            )
+            % 2147483647
+            % 10001
+            - 5000
+        ).alias("ci"),
+    )
+
+
 def pq_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization assignment pass: split each 64-dim vector
     into 8 subvectors, snap each to its nearest of 4 codebook centers,
@@ -1199,32 +1246,9 @@ def pq_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     256-row codebook → two map-side combinable aggregations; the
     argmin is a 4-row-per-key window.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim") / _PQ_DIMS).cast("int").alias("sub"),
-        (F.col("dim") % _PQ_DIMS).alias("j"),
-        F.round(F.col("x").cast("double") * 10000).cast("long").alias("xi"),
-    )
-    centers = spark.range(_PQ_SUBS * _PQ_CENTERS * _PQ_DIMS).select(
-        (F.col("id") / (_PQ_CENTERS * _PQ_DIMS)).cast("int").alias("sub"),
-        ((F.col("id") / _PQ_DIMS).cast("long") % _PQ_CENTERS).alias("center"),
-        (F.col("id") % _PQ_DIMS).alias("j"),
-        (
-            (
-                (F.col("id") / (_PQ_CENTERS * _PQ_DIMS)).cast("long") * 73856093
-                + ((F.col("id") / _PQ_DIMS).cast("long") % _PQ_CENTERS) * 19349663
-                + (F.col("id") % _PQ_DIMS) * 83492791
-            )
-            % 2147483647
-            % 10001
-            - 5000
-        ).alias("ci"),
-    )
+    dims = _e4_parts(load_table(spark, sf_dir, "embeddings"))
     dists = (
-        dims.join(F.broadcast(centers), ["sub", "j"])
+        dims.join(F.broadcast(_pq_centers_df(spark, _PQ_CENTERS)), ["sub", "j"])
         .groupBy("vec_id", "sub", "center")
         .agg(
             F.sum((F.col("xi") - F.col("ci")) * (F.col("xi") - F.col("ci"))).alias(
@@ -1286,6 +1310,34 @@ ORDER BY sub, center
 # --------------------------------------------------------------------------
 
 
+def _query_parts(parts: DataFrame) -> DataFrame:
+    """The query vectors' :func:`_e4_parts` as (q_id, qsub, j, qi)."""
+    return parts.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("sub").alias("qsub"),
+        "j",
+        F.col("xi").alias("qi"),
+    )
+
+
+def _maxsim_top3(dots: DataFrame) -> DataFrame:
+    """MaxSim from subpair dots (q_id, vec_id, qsub, sub, pdot): max
+    over document parts, summed over query parts, top-3 per query by
+    (score DESC, vec_id ASC)."""
+    maxsim = (
+        dots.groupBy("q_id", "vec_id", "qsub")
+        .agg(F.max("pdot").alias("best"))
+        .groupBy("q_id", "vec_id")
+        .agg(F.sum("best").alias("score"))
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
+    return (
+        maxsim.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 3)
+        .select("q_id", "vec_id", "score", "rank")
+    )
+
+
 def latesim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-interaction retrieval (ColBERT's MaxSim): treat each
     vector's 8 subvectors as per-token embeddings and score
@@ -1302,21 +1354,8 @@ def latesim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ANN candidates first (ivf/ivfpq) and MaxSim re-scores only the
     shortlist — the same composition pattern as ivfpq_ann_topk_bucketed.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
-    parts = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim") / _PQ_DIMS).cast("int").alias("sub"),
-        (F.col("dim") % _PQ_DIMS).alias("j"),
-        F.round(F.col("x").cast("double") * 10000).cast("long").alias("xi"),
-    )
-    qparts = parts.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("sub").alias("qsub"),
-        "j",
-        F.col("xi").alias("qi"),
-    )
+    parts = _e4_parts(load_table(spark, sf_dir, "embeddings"))
+    qparts = _query_parts(parts)
     # subpair dots: for each (q, doc, q-part, doc-part) the int64 dot,
     # then max over doc-parts, then sum over q-parts.
     dots = (
@@ -1325,18 +1364,7 @@ def latesim_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "vec_id", "qsub", "sub")
         .agg(F.sum(F.col("qi") * F.col("xi")).alias("pdot"))
     )
-    maxsim = (
-        dots.groupBy("q_id", "vec_id", "qsub")
-        .agg(F.max("pdot").alias("best"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("best").alias("score"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        maxsim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("q_id", "vec_id", "score", "rank")
-    )
+    return _maxsim_top3(dots)
 
 
 LATESIM_MAXSIM_ORACLE = f"""
@@ -1391,76 +1419,23 @@ def latesim_rerank_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
-    cents = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + N_CENTROIDS)
-    ).select(
-        (F.col("vec_id") - 100).alias("cent_id"),
-        F.col("embedding").alias("c_vec"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
-    assigned = (
-        emb.join(F.broadcast(cents), F.lit(True))
-        .withColumn("a_cos", assign_cos)
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("cent_id"),
-                F.struct(F.col("a_cos").alias("c"), (-F.col("cent_id")).alias("t")),
-            ).alias("list_id")
-        )
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
-    wp = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cent_id").asc())
-    probes = (
-        queries.join(F.broadcast(cents), F.lit(True))
-        .withColumn("p_cos", probe_cos)
-        .withColumn("p_rank", F.row_number().over(wp))
-        .filter(F.col("p_rank") <= N_PROBE)
-        .select("q_id", F.col("cent_id").alias("list_id"))
-    )
+    cents = _ivf_centroids(emb)
+    probes = _ivf_probes(_query_frame(emb), cents, N_PROBE)
     cand = (
-        assigned.join(F.broadcast(probes), "list_id")
+        _ivf_assign(emb, cents)
+        .join(F.broadcast(probes), "list_id")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id")
     )
-    parts = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "x")
-    ).select(
-        "vec_id",
-        (F.col("dim") / _PQ_DIMS).cast("int").alias("sub"),
-        (F.col("dim") % _PQ_DIMS).alias("j"),
-        F.round(F.col("x").cast("double") * 10000).cast("long").alias("xi"),
-    )
-    qparts = parts.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("sub").alias("qsub"),
-        "j",
-        F.col("xi").alias("qi"),
-    )
+    parts = _e4_parts(emb)
+    qparts = _query_parts(parts)
     dots = (
         parts.join(cand, "vec_id")
         .join(F.broadcast(qparts), ["q_id", "j"])
         .groupBy("q_id", "vec_id", "qsub", "sub")
         .agg(F.sum(F.col("qi") * F.col("xi")).alias("pdot"))
     )
-    maxsim = (
-        dots.groupBy("q_id", "vec_id", "qsub")
-        .agg(F.max("pdot").alias("best"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("best").alias("score"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        maxsim.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("q_id", "vec_id", "score", "rank")
-    )
+    return _maxsim_top3(dots)
 
 
 LATESIM_RERANK_ORACLE = f"""
@@ -1622,7 +1597,7 @@ _PQ_SHORTLIST = 50
 _IVFPQ_CENTERS = 16  # 4-bit codes — pq_quantize_stats keeps its 2-bit demo table
 
 def ivfpq_ann_oracle(n_probe: int = N_PROBE) -> str:
-    """Oracle template over the shared IVF probe-count dial (VERDICT r8 #6)."""
+    """Oracle template over the shared IVF probe-count dial."""
     return f"""
 WITH cents AS (
   SELECT vec_id - 100 AS cent_id, embedding AS c_vec
@@ -1722,41 +1697,6 @@ FROM (
 IVFPQ_ANN_ORACLE = ivfpq_ann_oracle()
 
 
-def _pq_centers_df(spark: SparkSession) -> DataFrame:
-    """The seeded integer PQ codebook as a frame: the (sub, center, j,
-    ci) table the stored index encodes with and the query-side ADC
-    lookup table scores against (pq_quantize_stats keeps a 2-bit
-    cousin)."""
-    return spark.range(_PQ_SUBS * _IVFPQ_CENTERS * _PQ_DIMS).select(
-        (F.col("id") / (_IVFPQ_CENTERS * _PQ_DIMS)).cast("int").alias("sub"),
-        ((F.col("id") / _PQ_DIMS).cast("long") % _IVFPQ_CENTERS).alias("center"),
-        (F.col("id") % _PQ_DIMS).alias("j"),
-        (
-            (
-                (F.col("id") / (_IVFPQ_CENTERS * _PQ_DIMS)).cast("long") * 73856093
-                + ((F.col("id") / _PQ_DIMS).cast("long") % _IVFPQ_CENTERS) * 19349663
-                + (F.col("id") % _PQ_DIMS) * 83492791
-            )
-            % 2147483647
-            % 10001
-            - 5000
-        ).alias("ci"),
-    )
-
-
-def _ivfpq_coarse_cents(emb: DataFrame) -> DataFrame:
-    """Coarse-quantizer centroids from an embeddings-shaped frame
-    (vec_id, embedding, nrm) — the data-sampled convention every IVF
-    operator here shares (vec_id 100..100+N_CENTROIDS)."""
-    return emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + N_CENTROIDS)
-    ).select(
-        (F.col("vec_id") - 100).alias("cent_id"),
-        F.col("embedding").alias("c_vec"),
-        F.col("nrm").alias("c_nrm"),
-    )
-
-
 def _ensure_ivfpq_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings corpus as ONE STORED bucketed IVF-PQ index table,
     the dedup._ensure_minhash_index_tables pattern applied to
@@ -1798,35 +1738,10 @@ def _ensure_ivfpq_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(spark.sparkContext.defaultParallelism)
             .withColumn("nrm", F.expr(vectors.norm("embedding")))
         )
-        cents = _ivfpq_coarse_cents(emb)
-        assign_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
-        assigned = (
-            emb.join(F.broadcast(cents), F.lit(True))
-            .withColumn("a_cos", assign_cos)
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.struct(F.col("cent_id"), F.col("embedding"), F.col("nrm")),
-                    F.struct(F.col("a_cos").alias("c"), (-F.col("cent_id")).alias("t")),
-                ).alias("best")
-            )
-            .select(
-                "vec_id",
-                F.col("best.cent_id").alias("list_id"),
-                F.col("best.embedding").alias("embedding"),
-                F.col("best.nrm").alias("nrm"),
-            )
-        )
-        dims = emb.select(
-            "vec_id", F.posexplode("embedding").alias("dim", "x")
-        ).select(
-            "vec_id",
-            (F.col("dim") / _PQ_DIMS).cast("int").alias("sub"),
-            (F.col("dim") % _PQ_DIMS).alias("j"),
-            F.round(F.col("x").cast("double") * 10000).cast("long").alias("xi"),
-        )
+        assigned = _ivf_assign(emb, _ivf_centroids(emb), "embedding", "nrm")
         codes = (
-            dims.join(F.broadcast(_pq_centers_df(spark)), ["sub", "j"])
+            _e4_parts(emb)
+            .join(F.broadcast(_pq_centers_df(spark, _IVFPQ_CENTERS)), ["sub", "j"])
             .groupBy("vec_id", "sub", "center")
             .agg(
                 F.sum((F.col("xi") - F.col("ci")) * (F.col("xi") - F.col("ci"))).alias(
@@ -1905,21 +1820,8 @@ def ivfpq_ann_topk_bucketed(
         .select("vec_id", "embedding")
         .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
-    cents = _ivfpq_coarse_cents(emb)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    probe_cos = F.expr(f"round({vectors.cosine('q_vec', 'c_vec', 'q_nrm', 'c_nrm')}, 4)")
-    wp = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cent_id").asc())
-    probes = (
-        queries.join(F.broadcast(cents), F.lit(True))
-        .withColumn("p_cos", probe_cos)
-        .withColumn("p_rank", F.row_number().over(wp))
-        .filter(F.col("p_rank") <= int(n_probe))
-        .select("q_id", F.col("cent_id").alias("list_id"))
-    )
+    queries = _query_frame(emb)
+    probes = _ivf_probes(queries, _ivf_centroids(emb), n_probe)
     # bounded control collect (≤ N_CENTROIDS ids): literal probe lists
     # are what lets the codes scan bucket-prune — a runtime join could
     # not prune the file listing
@@ -1929,16 +1831,9 @@ def ivfpq_ann_topk_bucketed(
 
     # ADC lookup table for the query set (tiny: queries × 8 subs × 16
     # centers), broadcast to the candidate scorer
-    qdims = queries.select(
-        "q_id", F.posexplode("q_vec").alias("dim", "x")
-    ).select(
-        "q_id",
-        (F.col("dim") / _PQ_DIMS).cast("int").alias("sub"),
-        (F.col("dim") % _PQ_DIMS).alias("j"),
-        F.round(F.col("x").cast("double") * 10000).cast("long").alias("qi"),
-    )
     ldot = (
-        qdims.join(F.broadcast(_pq_centers_df(spark)), ["sub", "j"])
+        _e4_parts(queries, "q_id", "q_vec", "qi")
+        .join(F.broadcast(_pq_centers_df(spark, _IVFPQ_CENTERS)), ["sub", "j"])
         .groupBy("q_id", "sub", F.col("center").alias("code"))
         .agg(F.sum(F.col("qi") * F.col("ci")).alias("part_dot"))
     )
@@ -1973,16 +1868,25 @@ def ivfpq_ann_topk_bucketed(
     # the probed buckets' vector columns and nothing else, with zero
     # index-side exchange (BroadcastHashJoin, index as stream side)
     fetch = idx.filter(in_probed).select("vec_id", "embedding", "nrm")
-    reranked = fetch.join(F.broadcast(shortlist), "vec_id").join(
-        F.broadcast(queries), "q_id"
+    return _cosine_topk(
+        fetch.join(F.broadcast(shortlist), "vec_id").join(F.broadcast(queries), "q_id")
     )
-    cos = F.expr(f"round({vectors.cosine('q_vec', 'embedding', 'q_nrm', 'nrm')}, 4)")
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+
+
+def _list_pairs(idx: DataFrame, pair: str, *keep: str) -> DataFrame:
+    """Vector pairs that share a list of a stored bucketBy(list_id)
+    index, with their 4-dp cosine: the sort-merge self-join on list_id
+    reads co-located, pre-sorted buckets on both sides, so it plans no
+    exchange and no sort. ``pair`` is the SQL condition on (vec_id,
+    nn_id); ``keep`` adds index columns to the vec_id side."""
+    a = idx.select("list_id", *keep, "vec_id", "embedding", "nrm")
+    b = idx.selectExpr(
+        "list_id AS list_id_b", "vec_id AS nn_id", "embedding AS emb_b", "nrm AS nrm_b"
+    )
     return (
-        reranked.withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cos", "rank")
+        a.hint("merge")
+        .join(b, F.expr(f"list_id = list_id_b AND {pair}"))
+        .withColumn("cos", F.expr(_cos4("embedding", "emb_b", "nrm", "nrm_b")))
     )
 
 
@@ -2013,23 +1917,8 @@ def ivf_within_list_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic and fully oracle-checked: same data-sampled
     centroids and 4-dp-rounded cosine as every ANN operator here,
     ties broken by smaller nn_id."""
-    idx = _ensure_ivfpq_index_table(spark, sf_dir)
-    a = idx.select("list_id", "vec_id", "embedding", "nrm")
-    b = idx.select(
-        F.col("list_id").alias("list_id_b"),
-        F.col("vec_id").alias("nn_id"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = F.expr(f"round({vectors.cosine('embedding', 'emb_b', 'nrm', 'nrm_b')}, 4)")
     return (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("list_id") == F.col("list_id_b"))
-            & (F.col("vec_id") != F.col("nn_id")),
-        )
-        .withColumn("cos", cos)
+        _list_pairs(_ensure_ivfpq_index_table(spark, sf_dir), "vec_id != nn_id")
         .groupBy("vec_id")
         .agg(
             F.max_by(
@@ -2041,7 +1930,7 @@ def ivf_within_list_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SemDeDup drop threshold (VERDICT r12 #7). Real pipelines run ~0.9+
+# SemDeDup drop threshold. Real pipelines run ~0.9+
 # on trained encoders; the fixture embeddings are seeded near-random
 # (within-list NN cosine tops out ~0.49 at every SF), so the
 # demonstration threshold sits at the fixture NN-cos ~0.9-quantile —
@@ -2057,22 +1946,8 @@ def _semdedup_dropped(idx: DataFrame) -> DataFrame:
     shared by :func:`semdedup_apply` and the at-scale certificate in
     results/semdedup_scale_probe.json, so that run measured exactly
     the shipped decision join (same bucketed SMJ, same expressions)."""
-    a = idx.select("list_id", "vec_id", "embedding", "nrm")
-    b = idx.select(
-        F.col("list_id").alias("list_id_b"),
-        F.col("vec_id").alias("nn_id"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = F.expr(f"round({vectors.cosine('embedding', 'emb_b', 'nrm', 'nrm_b')}, 4)")
     return (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("list_id") == F.col("list_id_b"))
-            & (F.col("nn_id") < F.col("vec_id")),
-        )
-        .withColumn("cos", cos)
+        _list_pairs(idx, "nn_id < vec_id")
         .filter(F.col("cos") >= F.lit(SEMDEDUP_TAU))
         .groupBy("list_id", "vec_id")
         .agg(F.max("cos").alias("w_cos"))
@@ -2080,9 +1955,9 @@ def _semdedup_dropped(idx: DataFrame) -> DataFrame:
 
 
 def semdedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup applied end-to-end (Abbas et al. 2023; VERDICT r12
-    #7) — the THIRD consumer of the stored bucketBy(list_id) IVF-PQ
-    index: :func:`ivf_within_list_nn` computes the within-list NN
+    """SemDeDup applied end-to-end (Abbas et al. 2023) — the THIRD
+    consumer of the stored bucketBy(list_id) IVF-PQ index:
+    :func:`ivf_within_list_nn` computes the within-list NN
     scan; this operator takes the dedup DECISION and reports corpus
     accounting. Drop rule (deterministic, order-free): a vector is
     dropped iff some SMALLER-id vector in its coarse list has cosine
@@ -2168,7 +2043,7 @@ FROM totals t LEFT JOIN drops d USING (list_id)
 def _ensure_ivfpq_multiprobe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The soft-IVF (top-2 multi-assignment) membership table as ONE
     STORED bucketed table — the standard mitigation for SemDeDup's
-    cross-list boundary miss (VERDICT r13 #3): a near-dup pair whose
+    cross-list boundary miss: a near-dup pair whose
     members land in different coarse lists is invisible to any
     within-list decision, and multi-assigning every vector to its
     top-2 coarse lists makes a pair visible whenever their top-2 sets
@@ -2203,17 +2078,7 @@ def _ensure_ivfpq_multiprobe_table(spark: SparkSession, sf_dir: str) -> DataFram
             .repartition(spark.sparkContext.defaultParallelism)
             .withColumn("nrm", F.expr(vectors.norm("embedding")))
         )
-        cents = _ivfpq_coarse_cents(emb)
-        a_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
-        wa = Window.partitionBy("vec_id").orderBy(
-            F.col("a_cos").desc(), F.col("cent_id").asc()
-        )
-        ranked = (
-            emb.join(F.broadcast(cents), F.lit(True))
-            .withColumn("a_cos", a_cos)
-            .withColumn("a_rank", F.row_number().over(wa))
-            .filter(F.col("a_rank") <= 2)
-        )
+        ranked = _ivf_top2(emb, _ivf_centroids(emb))
         # rank-1 list carried onto both rows: same vec_id partitioning
         # as the rank window, so no additional exchange
         wp = (
@@ -2235,11 +2100,11 @@ def _ensure_ivfpq_multiprobe_table(spark: SparkSession, sf_dir: str) -> DataFram
 
 def semdedup_apply_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`semdedup_apply` over the soft-IVF top-2 membership table
-    (VERDICT r13 #3) — same drop rule (a vector is dropped iff some
-    smaller-id vector at cosine >= SEMDEDUP_TAU shares A list with
-    it), but "shares a list" now means the pair's top-2 coarse lists
-    INTERSECT, so boundary pairs split across two lists are seen
-    whenever either side's second-choice list covers the other.
+    — same drop rule (a vector is dropped iff some smaller-id vector
+    at cosine >= SEMDEDUP_TAU shares A list with it), but "shares a
+    list" now means the pair's top-2 coarse lists INTERSECT, so
+    boundary pairs split across two lists are seen whenever either
+    side's second-choice list covers the other.
     Accounting stays per PRIMARY list with the identical output schema
     (list_id, n_vectors, n_kept, n_dropped, min_drop_cos), so the two
     variants diff row-for-row and the boundary-miss certificate
@@ -2260,22 +2125,8 @@ def semdedup_apply_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-exchange totals side. That is the entire scale price of
     closing the boundary-miss class."""
     midx = _ensure_ivfpq_multiprobe_table(spark, sf_dir)
-    a = midx.select("list_id", "plist_id", "vec_id", "embedding", "nrm")
-    b = midx.select(
-        F.col("list_id").alias("list_id_b"),
-        F.col("vec_id").alias("nn_id"),
-        F.col("embedding").alias("emb_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = F.expr(f"round({vectors.cosine('embedding', 'emb_b', 'nrm', 'nrm_b')}, 4)")
     dropped = (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("list_id") == F.col("list_id_b"))
-            & (F.col("nn_id") < F.col("vec_id")),
-        )
-        .withColumn("cos", cos)
+        _list_pairs(midx, "nn_id < vec_id", "plist_id")
         .filter(F.col("cos") >= F.lit(SEMDEDUP_TAU))
         .groupBy("plist_id", "vec_id")
         .agg(F.max("cos").alias("w_cos"))
@@ -2349,7 +2200,7 @@ FROM totals t LEFT JOIN drops d USING (list_id)
 
 
 def semdedup_boundary_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cross-list boundary-miss CERTIFICATE (VERDICT r13 #3): the
+    """The cross-list boundary-miss CERTIFICATE: the
     planted-twin recall probe cannot measure the pair class SemDeDup's
     within-list decision structurally misses — exact twins always
     co-assign, so a probe built from them reads recall 1.0 no matter
@@ -2375,14 +2226,8 @@ def semdedup_boundary_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )
-    cents = _ivfpq_coarse_cents(emb)
-    a_cos = F.expr(f"round({vectors.cosine('embedding', 'c_vec', 'nrm', 'c_nrm')}, 4)")
-    wa = Window.partitionBy("vec_id").orderBy(F.col("a_cos").desc(), F.col("cent_id").asc())
     asg = (
-        emb.join(F.broadcast(cents), F.lit(True))
-        .withColumn("a_cos", a_cos)
-        .withColumn("a_rank", F.row_number().over(wa))
-        .filter(F.col("a_rank") <= 2)
+        _ivf_top2(emb, _ivf_centroids(emb))
         .groupBy("vec_id")
         .agg(
             F.min_by("cent_id", "a_rank").alias("l1"),
@@ -2399,7 +2244,7 @@ def semdedup_boundary_miss(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ev"),
         F.col("nrm").alias("nv"),
     )
-    cos = F.expr(f"round({vectors.cosine('eu', 'ev', 'nu', 'nv')}, 4)")
+    cos = F.expr(_cos4("eu", "ev", "nu", "nv"))
     pairs = (
         u.join(v, F.col("u") < F.col("v"))
         .withColumn("cos", cos)

@@ -57,7 +57,11 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _drain(streaming_df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
     """Run the streaming query to completion on the fixture files and
-    return the materialized sink as a batch DataFrame."""
+    return the materialized sink as a batch DataFrame.
+
+    The sink's temp view is dropped as soon as ``spark.table`` has
+    resolved it: the returned DataFrame holds the sink's rows in its
+    plan, and a long-lived session keeps no view per call."""
     name = "sink_" + uuid.uuid4().hex[:12]
     q = (
         streaming_df.writeStream.outputMode(mode)
@@ -69,8 +73,9 @@ def _drain(streaming_df: DataFrame, spark: SparkSession, mode: str) -> DataFrame
         q.processAllAvailable()
     finally:
         q.stop()
-    # the memory-sink table stays registered for the session lifetime
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def streaming_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -133,6 +133,24 @@ def test_streaming_session_window_subset_of_batch(spark, sf_dir):
         )
 
 
+def test_streaming_drain_drops_its_sink_view(spark, sf_dir):
+    """Each streaming query drains into a memory sink whose temp view is
+    dropped once read: a query built twice leaves no ``sink_*`` view in
+    the session, and both DataFrames still return the oracle's rows."""
+    from .helpers import compare_frames, duckdb_connection
+
+    dfs = [sw.streaming_hourly_agg(spark, sf_dir) for _ in range(2)]
+    sinks = [t.name for t in spark.catalog.listTables() if t.name.startswith("sink_")]
+    assert not sinks, f"memory-sink views left registered: {sinks}"
+    con = duckdb_connection(sf_dir)
+    try:
+        oracle = con.execute(sw.STREAMING_HOURLY_ORACLE).fetchdf()
+    finally:
+        con.close()
+    for df in dfs:
+        assert compare_frames(df.toPandas(), oracle) == []
+
+
 def test_observation_fires_under_local_checkpoint(spark):
     """Pin the mechanism dedup_clusters_cc's convergence witness rides
     on: an ``Observation`` metric attached below ``localCheckpoint(
@@ -639,6 +657,32 @@ def test_ivfpq_recalls_most_of_ivf_flat(spark, sf_dir):
     assert ivf, "IVF returned nothing"
     recall = len(pq & ivf) / len(ivf)
     assert recall >= 0.7, f"PQ shortlist lost too much: recall {recall}"
+
+
+def test_ivf_quantizer_consumers_agree(spark, sf_dir, monkeypatch):
+    """One coarse quantizer: for every vector, the list ivf_ann_topk
+    assigns in the session, ``list_id`` in the stored IVF-PQ index and
+    ``plist_id`` (the rank-1 list) in the stored top-2 membership table
+    are the same list."""
+    persisted = []
+    persist = similarity._persist_index
+    monkeypatch.setattr(
+        similarity, "_persist_index", lambda df: persisted.append(df) or persist(df)
+    )
+    similarity.ivf_ann_topk(spark, sf_dir)
+    (lists,) = persisted
+    session = {r.vec_id: r.list_id for r in lists.select("vec_id", "list_id").collect()}
+    idx = similarity._ensure_ivfpq_index_table(spark, sf_dir)
+    stored = {r.vec_id: r.list_id for r in idx.select("vec_id", "list_id").collect()}
+    midx = similarity._ensure_ivfpq_multiprobe_table(spark, sf_dir)
+    primary = {}
+    for r in midx.select("vec_id", "plist_id").collect():
+        primary.setdefault(r.vec_id, set()).add(r.plist_id)
+
+    assert len(session) == load_table(spark, sf_dir, "embeddings").count()
+    assert len(set(session.values())) > 1, "every vector fell into one list"
+    assert stored == session
+    assert primary == {v: {lst} for v, lst in session.items()}
 
 
 def test_streaming_session_multibatch_equals_batch():
