@@ -35,6 +35,11 @@ before multiplication so nothing overflows int64.
 
 from __future__ import annotations
 
+import os
+from typing import Callable
+from urllib.parse import unquote, urlparse
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -216,20 +221,69 @@ def minhash_signatures(corpus: DataFrame, n_hashes: int = N_HASHES) -> DataFrame
     )
 
 
-def _persist_index(df: DataFrame) -> DataFrame:
-    """Persist an index structure (MinHash signatures, SimHash bands,
-    shingle postings, the LSH bucket table, IVF inverted lists).
+# (session UUID, index name, params) -> (input-file URIs, their
+# identities at build time, the leaf or leaves)
+_INDEXES: dict[tuple, tuple[list, list, DataFrame | tuple[DataFrame, DataFrame]]] = {}
 
-    Spark's CacheManager keys on the canonical plan, so repeated
-    invocations over the same sf_dir share ONE cache entry — the index
-    is computed once and every later run (and every self-join side)
-    reuses it, exactly the build-once/query-often lifecycle of a real
-    index. MEMORY_AND_DISK bounds memory (LRU-evicts / spills
-    under pressure); at 100 TB the same role is a stored table.
-    """
-    from pyspark import StorageLevel
 
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+def _file_identities(uris: list[str]) -> list[tuple[str, int, int] | None]:
+    """(path, size, mtime_ns) per input-file URI, None where the file
+    cannot be stat'ed (a remote URI, a deleted file)."""
+    out = []
+    for uri in uris:
+        path = unquote(urlparse(uri).path)
+        try:
+            st = os.stat(path)
+        except OSError:
+            out.append(None)
+        else:
+            out.append((path, st.st_size, st.st_mtime_ns))
+    return out
+
+
+def _index(
+    spark: SparkSession,
+    name: str,
+    build: Callable[[], DataFrame],
+    *params: object,
+    derive: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame | tuple[DataFrame, DataFrame]:
+    """An index structure (MinHash signatures, SimHash bands, shingle
+    postings, LSH buckets, IVF inverted lists) as a materialized leaf,
+    built once per session and input-file identity, then queried.
+
+    The lookup key is (session UUID, ``name``, ``params``): ``params``
+    are the call arguments the index depends on (``sf_dir``, a window
+    width), never a search parameter such as ``n_probe``. On a miss,
+    ``build()`` makes the frame, the identity ``(path, size, mtime_ns)``
+    of every file in its ``inputFiles()`` is recorded, and the frame is
+    stored as ``localCheckpoint(eager=True)`` at MEMORY_AND_DISK. A hit
+    re-stats those files and returns the same leaf, so a rebuilt query
+    fires no job and is analysed over a ``Scan ExistingRDD``, not over
+    the whole index plan; a rewritten or vanished file rebuilds it (the
+    file-identity rule of ``catalog.read_parquet``). ``derive`` makes a
+    second index from the first one's leaf (a band table from the
+    signatures); it lives in the same entry, so it is rebuilt with its
+    base, and the call returns both leaves. Entries of other sessions
+    are dropped when one is stored. At 100 TB the same role is a stored
+    table (``_ensure_minhash_index_tables``)."""
+    key = (spark._jsparkSession.sessionUUID(), name, params)
+    entry = _INDEXES.get(key)
+    if entry is not None:
+        uris, idents, leaf = entry
+        if None not in idents and _file_identities(uris) == idents:
+            return leaf
+    frame = build()
+    uris = frame.inputFiles()
+    idents = _file_identities(uris)
+    level = StorageLevel.MEMORY_AND_DISK
+    leaf = frame.localCheckpoint(eager=True, storageLevel=level)
+    if derive is not None:
+        leaf = (leaf, derive(leaf).localCheckpoint(eager=True, storageLevel=level))
+    for other in [k for k in _INDEXES if k[0] != key[0]]:
+        del _INDEXES[other]
+    _INDEXES[key] = (uris, idents, leaf)
+    return leaf
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,23 +299,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin `dedup_ngram_jaccard` is the hash-free, fully oracle-checked
     version of the same pipeline.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir)
-    sigs = _persist_index(minhash_signatures(corpus))
-
+    sigs = _index(
+        spark, "minhash_lsh_sigs",
+        lambda: minhash_signatures(_corpus_with_near_dups(spark, sf_dir)), sf_dir,
+    )
     # Bands carry only (doc_id, band, bh) — 3 longs/row — through the
     # candidate join; the 32-long signatures are re-attached to the
     # (far smaller) deduplicated pair set afterwards. Shuffling full
     # signatures through an 8-way-exploded self-join moves 8x the
     # bytes for nothing. `sigs` feeds three consumers (bands + two
-    # re-attach joins), so it is persisted MEMORY_AND_DISK — computed
-    # once, not three times. At 100 TB the same role is played by
-    # writing the signature table to storage once and reading it back.
-    bands = sigs.selectExpr(
-        "doc_id",
-        f"explode(transform(sequence(0, {N_BANDS - 1}), b ->"
-        f" struct(b AS band, xxhash64(slice(signature, b * {BAND_ROWS} + 1, {BAND_ROWS})) AS bh)))"
-        " AS band",
-    ).selectExpr("doc_id", "band.band AS band", "band.bh AS bh")
+    # re-attach joins), so it is an index leaf — computed once, not
+    # three times. At 100 TB the same role is played by writing the
+    # signature table to storage once and reading it back.
+    bands = band_table(sigs)
 
     cand = (
         bands.alias("l")
@@ -331,18 +381,20 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only check — xxhash64-dependent; tests/test_semantics.py
     asserts found == {injected pairs with hamming<=3} exactly.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir)
-    fps = simhash_fingerprints(corpus)
-    # Self-joined below (l and r both scan it): persist so the 64-vote
-    # fingerprint aggregation runs once, not once per join side (cache
-    # keyed on canonical plan, shared across invocations).
-    bands = _persist_index(fps.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.expr("transform(sequence(0, 3), b -> struct(b AS band, shiftright(simhash, b * 16) & 65535 AS bh))")
-        ).alias("x"),
-    ).select("doc_id", "simhash", F.col("x.band").alias("band"), F.col("x.bh").alias("bh")))
+
+    def build() -> DataFrame:
+        fps = simhash_fingerprints(_corpus_with_near_dups(spark, sf_dir))
+        return fps.select(
+            "doc_id",
+            "simhash",
+            F.explode(
+                F.expr("transform(sequence(0, 3), b -> struct(b AS band, shiftright(simhash, b * 16) & 65535 AS bh))")
+            ).alias("x"),
+        ).select("doc_id", "simhash", F.col("x.band").alias("band"), F.col("x.bh").alias("bh"))
+
+    # Self-joined below (l and r both scan it): an index leaf, so the
+    # 64-vote fingerprint aggregation runs once, not once per join side.
+    bands = _index(spark, "simhash_bands", build, sf_dir)
 
     cand = (
         bands.alias("l")
@@ -392,20 +444,23 @@ def _shingle_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle space), identically in the oracles. The hot set is tiny —
     a broadcast anti-join, no shuffle. The join result carries per-doc
     set sizes so no second pass is needed. Hash-free, deterministic,
-    and persisted: Spark's plan-keyed cache means the Jaccard query,
-    the containment query, and the CC clustering all share ONE build.
+    and an index leaf (:func:`_index`): the Jaccard query, the
+    containment query, and the CC clustering all share ONE build.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir)
-    all_shingled = _distinct_shingled(corpus)
-    hot = (
-        all_shingled.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > MAX_SHINGLE_DF)
-        .select("sh")
-    )
-    shingled = all_shingled.join(F.broadcast(hot), "sh", "left_anti")
-    sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    sh_sz = _persist_index(shingled.join(sizes, "doc_id"))
+
+    def build() -> DataFrame:
+        all_shingled = _distinct_shingled(_corpus_with_near_dups(spark, sf_dir))
+        hot = (
+            all_shingled.groupBy("sh")
+            .agg(F.count("*").alias("df"))
+            .filter(F.col("df") > MAX_SHINGLE_DF)
+            .select("sh")
+        )
+        shingled = all_shingled.join(F.broadcast(hot), "sh", "left_anti")
+        sizes = shingled.groupBy("doc_id").agg(F.count("*").alias("sz"))
+        return shingled.join(sizes, "doc_id")
+
+    sh_sz = _index(spark, "shingle_postings", build, sf_dir)
 
     l, r = sh_sz.alias("l"), sh_sz.alias("r")
     return (
@@ -665,26 +720,29 @@ def dedup_winnowing_fingerprints(
     shingle stream the Jaccard pipeline ships. Pair score = Jaccard
     over winnowed-print sets, threshold WINNOW_JACCARD.
     """
-    corpus = _corpus_with_near_dups(spark, sf_dir)
-    all_prints = (
-        _with_winnow_hashes(corpus)
-        .select("doc_id", F.explode(F.expr(_prints_expr(w))).alias("p"))
-        # A zero-shingle doc yields a NULL print (array_min of empty H).
-        # Drop it explicitly on BOTH engines: Spark's left_anti would keep
-        # the NULL posting row (inflating that doc's sz) while the oracle's
-        # NOT IN drops it — a latent asymmetry even though NULL never
-        # equi-joins into pairs (ADVICE r7).
-        .filter(F.col("p").isNotNull())
-    )
-    hot = (
-        all_prints.groupBy("p")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > MAX_PRINT_DF)
-        .select("p")
-    )
-    pruned = all_prints.join(F.broadcast(hot), "p", "left_anti")
-    sizes = pruned.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    p_sz = _persist_index(pruned.join(sizes, "doc_id"))
+
+    def build() -> DataFrame:
+        all_prints = (
+            _with_winnow_hashes(_corpus_with_near_dups(spark, sf_dir))
+            .select("doc_id", F.explode(F.expr(_prints_expr(w))).alias("p"))
+            # A zero-shingle doc yields a NULL print (array_min of empty H).
+            # Drop it explicitly on BOTH engines: Spark's left_anti would keep
+            # the NULL posting row (inflating that doc's sz) while the oracle's
+            # NOT IN drops it — a latent asymmetry even though NULL never
+            # equi-joins into pairs (ADVICE r7).
+            .filter(F.col("p").isNotNull())
+        )
+        hot = (
+            all_prints.groupBy("p")
+            .agg(F.count("*").alias("df"))
+            .filter(F.col("df") > MAX_PRINT_DF)
+            .select("p")
+        )
+        pruned = all_prints.join(F.broadcast(hot), "p", "left_anti")
+        sizes = pruned.groupBy("doc_id").agg(F.count("*").alias("sz"))
+        return pruned.join(sizes, "doc_id")
+
+    p_sz = _index(spark, "winnow_postings", build, sf_dir, w)
     l, r = p_sz.alias("l"), p_sz.alias("r")
     pairs = (
         l.join(r, (F.col("l.p") == F.col("r.p")) & (F.col("l.doc_id") < F.col("r.doc_id")))
@@ -1209,35 +1267,49 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact copies (vec_id+1,000,000 for vec_id < 25) give known
     cosine-1.0 pairs that must collide in every table.
     """
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    copies = emb.filter(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    corpus = emb.unionByName(copies).repartition(spark.sparkContext.defaultParallelism)
-    return embedding_cosine_pairs(corpus, threshold=0.99)
+    return embedding_cosine_pairs(_embedding_dup_corpus(spark, sf_dir), threshold=0.99)
+
+
+def _embedding_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """embeddings ∪ exact copies of vec_id < 25 (id + 1,000,000) as
+    (vec_id, embedding, nrm), an index leaf shared by the embedding
+    dedup queries.
+
+    Norms are precomputed once per row BEFORE any verify join: inside
+    the join each side's norm would be re-derived per candidate
+    partner. sqrt is deterministic, so dot/(norm_a*norm_b) is
+    bit-identical to the inlined form. The leaf is consumed by the
+    candidate stage and both re-attach joins."""
+    from ..functions import vectors
+
+    def build() -> DataFrame:
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        copies = emb.filter(F.col("vec_id") < 25).select(
+            (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+        )
+        return (
+            emb.unionByName(copies)
+            .repartition(spark.sparkContext.defaultParallelism)
+            .withColumn("nrm", F.expr(vectors.norm("embedding")))
+        )
+
+    return _index(spark, "embedding_dup_corpus", build, sf_dir)
 
 
 def embedding_cosine_pairs(
-    raw_corpus: DataFrame,
+    corpus: DataFrame,
     threshold: float = 0.99,
     dim: int = 64,
     n_tables: int = COSINE_LSH_TABLES,
     n_planes: int = COSINE_LSH_PLANES,
 ) -> DataFrame:
-    """The LSH-candidate + exact-verify pair pipeline over any
-    (vec_id, embedding) DataFrame — shared by the registered fixture
-    query and the 1M-vector scale run (SCALE.md "Measured headroom")."""
+    """The LSH-candidate + exact-verify pair pipeline over a
+    (vec_id, embedding, nrm) DataFrame, ``nrm`` being the L2 norm of
+    ``embedding``. ``corpus`` is read three times (bands and both
+    re-attach joins), so pass a materialized one
+    (:func:`_embedding_dup_corpus`)."""
     from ..functions import vectors
     from .similarity import _hyperplanes, lsh_bucket
-
-    # Norms precomputed once per row BEFORE the verify join: inside the
-    # join each side's norm would be re-derived per candidate partner.
-    # sqrt is deterministic, so dot/(norm_a*norm_b) is bit-identical
-    # to the inlined form. Persisted: consumed by the bands projection
-    # and both re-attach joins.
-    corpus = _persist_index(
-        raw_corpus.withColumn("nrm", F.expr(vectors.norm("embedding")))
-    )
 
     buckets = [
         lsh_bucket("embedding", _hyperplanes(dim, n_planes, seed=42 + 1000 * t))
@@ -1330,16 +1402,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import vectors
     from .similarity import _argmin_assign
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    copies = emb.filter(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    corpus = _persist_index(
-        emb.unionByName(copies)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", F.expr(vectors.norm("embedding")))
-    )
-    cents = emb.filter(F.col("vec_id") < SEMDEDUP_K).select(
+    corpus = _embedding_dup_corpus(spark, sf_dir)
+    cents = corpus.filter(F.col("vec_id") < SEMDEDUP_K).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("c_vec")
     )
     assigned = _argmin_assign(corpus, cents, "centroid_id")
@@ -1452,8 +1516,6 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the same closure via DuckDB's recursive CTE — an
     iterative Spark algorithm with an exact SQL differential check.
     """
-    from pyspark import StorageLevel
-
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
@@ -1682,8 +1744,6 @@ def dedup_clusters_star_contraction(spark: SparkSession, sf_dir: str) -> DataFra
     persist per round; lineage stays O(rounds) = O(log n), with
     ``localCheckpoint`` the escape hatch past ~20 rounds at scale.
     """
-    from pyspark import StorageLevel
-
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     nodes = (
         pairs.select(F.col("doc_a").alias("node"))
@@ -2046,7 +2106,7 @@ DEDUP_SENTENCE_CLEAN_ORACLE = sentence_clean_oracle()
 
 
 # --------------------------------------------------------------------------
-# incremental MinHash: batch lookup against a persisted signature index
+# incremental MinHash: batch lookup against a materialized signature index
 # --------------------------------------------------------------------------
 
 # Floor for the incremental recall certificate: exact cross-side
@@ -2112,16 +2172,26 @@ def band_table(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
 
 
+def _incremental_batch_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ingest batch's MinHash signatures as an index leaf: each
+    probe reads them twice (its bands and the verify join), and both
+    incremental variants probe with the same batch."""
+    return _index(
+        spark, "minhash_incr_batch_sigs",
+        lambda: minhash_signatures(_incremental_sides(spark, sf_dir)[1]), sf_dir,
+    )
+
+
 def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup lookup: probe a new batch against a
-    PERSISTED band-signature index of the existing corpus — the
+    MATERIALIZED band-signature index of the existing corpus — the
     production composition of MinHash-LSH (build the index once, query
     it per ingest batch) that batch `dedup_minhash_lsh` (self-join)
     and `dedup_incremental_exact` (exact digests only) each cover half
     of.
 
-    Index side: corpus signatures + band table, persisted
-    (MEMORY_AND_DISK here; a stored table bucketed by (band, bh) at
+    Index side: corpus signatures + band table, one in-memory index
+    entry (:func:`_index`; a stored table bucketed by (band, bh) at
     100 TB — the probe join then co-locates on the bucket key with no
     corpus-side shuffle). Query side: the batch computes its own
     signatures/bands — cost proportional to the BATCH, never the
@@ -2134,7 +2204,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     paired certificate `dedup_minhash_incremental_recall` is fully
     oracle-checked.
     """
-    corpus, batch = _incremental_sides(spark, sf_dir)
     # r15: the r14 probe-side scan-parallelism floor REVERTED — its
     # 1.3x was a hot-epoch read (the serial stock scan is maximally
     # penalized in contended windows); the driver read 0.65x and the
@@ -2142,9 +2211,12 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (results/floor_requalify_r15.json), under the pinned >= 1.15x
     # keep rule. The bucketed-index twin stays unfloored as before
     # (flooring a bucketBy write input multiplies per-bucket files).
-    index_sigs = _persist_index(minhash_signatures(corpus))
-    index_bands = _persist_index(band_table(index_sigs))
-    batch_sigs = _persist_index(minhash_signatures(batch))
+    index_sigs, index_bands = _index(
+        spark, "minhash_incr_index",
+        lambda: minhash_signatures(_incremental_sides(spark, sf_dir)[0]), sf_dir,
+        derive=band_table,
+    )
+    batch_sigs = _incremental_batch_sigs(spark, sf_dir)
     cand = (
         band_table(batch_sigs)
         .withColumnRenamed("doc_id", "batch_id")
@@ -2226,9 +2298,8 @@ def _bucketed_probe_band_join(
     The merge hint keeps AQE from flipping to broadcast at fixture
     scale — at 100 TB the index side is the corpus and could never
     broadcast; the co-located bucket read is the point."""
-    _, batch = _incremental_sides(spark, sf_dir)
     index_bands, _ = _ensure_minhash_index_tables(spark, sf_dir)
-    batch_sigs = _persist_index(minhash_signatures(batch))
+    batch_sigs = _incremental_batch_sigs(spark, sf_dir)
     return (
         band_table(batch_sigs)
         .withColumnRenamed("doc_id", "batch_id")
@@ -2307,20 +2378,24 @@ def dedup_minhash_incremental_recall(spark: SparkSession, sf_dir: str) -> DataFr
     asserts TRUE — an index/banding bug collapses recall and flips
     it).
     """
-    corpus, batch = _incremental_sides(spark, sf_dir)
-    postings = _distinct_shingled(
-        corpus.select(F.lit("c").alias("side"), "doc_id", "text").unionByName(
-            batch.select(F.lit("b").alias("side"), "doc_id", "text")
-        ),
-        cols=("side", "doc_id"),
-    )
-    hot = (
-        postings.groupBy("sh")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > MAX_SHINGLE_DF)
-        .select("sh")
-    )
-    kept = _persist_index(postings.join(F.broadcast(hot), "sh", "left_anti"))
+
+    def build() -> DataFrame:
+        corpus, batch = _incremental_sides(spark, sf_dir)
+        postings = _distinct_shingled(
+            corpus.select(F.lit("c").alias("side"), "doc_id", "text").unionByName(
+                batch.select(F.lit("b").alias("side"), "doc_id", "text")
+            ),
+            cols=("side", "doc_id"),
+        )
+        hot = (
+            postings.groupBy("sh")
+            .agg(F.count("*").alias("df"))
+            .filter(F.col("df") > MAX_SHINGLE_DF)
+            .select("sh")
+        )
+        return postings.join(F.broadcast(hot), "sh", "left_anti")
+
+    kept = _index(spark, "minhash_incr_postings", build, sf_dir)
     sizes = kept.groupBy("side", "doc_id").agg(F.count("*").alias("sz"))
     sized = kept.join(sizes, ["side", "doc_id"])
     b, c = sized.filter(F.col("side") == "b").alias("b"), sized.filter(

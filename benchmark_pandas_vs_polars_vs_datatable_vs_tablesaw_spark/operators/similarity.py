@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_table_parallel
 from ..functions import vectors
-from .dedup import _persist_index
+from .dedup import _index
 
 N_QUERIES = 10
 TOP_K = 5
@@ -163,33 +163,35 @@ def ann_lsh_topk(
     ``_lsh_oracle_sql`` reproduces them bit-exactly in DuckDB.
     tests/test_semantics.py additionally asserts recall@5 >= 0.4 vs
     the exact baseline."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", F.expr(vectors.norm("embedding")))
-    )
-    dim = 64
-    tables = [
-        (t, _hyperplanes(dim, n_planes, seed=42 + 1000 * t)) for t in range(n_tables)
-    ]
-    sig = F.expr(
-        "array("
-        + ", ".join(
-            f"struct({t} AS tbl, {lsh_bucket('embedding', planes)} AS bucket)"
-            for t, planes in tables
+
+    def build() -> DataFrame:
+        emb = (
+            load_table(spark, sf_dir, "embeddings")
+            .select("vec_id", "embedding")
+            .repartition(spark.sparkContext.defaultParallelism)
+            .withColumn("nrm", F.expr(vectors.norm("embedding")))
         )
-        + ")"
-    )
-    bucketed = _persist_index(
-        emb.select("vec_id", "embedding", "nrm", F.explode(sig).alias("s")).select(
+        dim = 64
+        tables = [
+            (t, _hyperplanes(dim, n_planes, seed=42 + 1000 * t)) for t in range(n_tables)
+        ]
+        sig = F.expr(
+            "array("
+            + ", ".join(
+                f"struct({t} AS tbl, {lsh_bucket('embedding', planes)} AS bucket)"
+                for t, planes in tables
+            )
+            + ")"
+        )
+        return emb.select("vec_id", "embedding", "nrm", F.explode(sig).alias("s")).select(
             "vec_id",
             "embedding",
             "nrm",
             F.col("s.tbl").alias("tbl"),
             F.col("s.bucket").alias("bucket"),
         )
-    )
+
+    bucketed = _index(spark, "lsh_buckets", build, sf_dir, n_tables, n_planes)
 
     queries = _query_frame(bucketed, "tbl AS q_tbl", "bucket AS q_bucket")
     cand = (
@@ -379,19 +381,29 @@ def ivf_ann_topk(
     nprobe/nlist of the data. This query demonstrates that read path,
     with both the assignment join and the probe join broadcast
     (centroids and queries are small by construction).
+
+    The inverted lists are an index leaf (:func:`_index`) built once
+    per session and fixture identity. It carries ``embedding`` and
+    ``nrm``, so the centroids and the query vectors are read from it
+    too: a query over a built index scans no parquet and repartitions
+    nothing. ``n_probe`` is a search parameter, not part of the index.
     """
-    # repartition: the single-file fixture parquet yields 2 input
-    # splits, which would serialize the 64-dim cosine assignment pass
-    # on 2 cores (same pattern as dedup._corpus_with_near_dups)
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("nrm", F.expr(vectors.norm("embedding")))
-    )
-    cents = _ivf_centroids(emb)
-    assigned = _persist_index(_ivf_assign(emb, cents, "embedding", "nrm"))
-    probes = _ivf_probes(_query_frame(emb), cents, n_probe, "q_vec", "q_nrm")
+
+    def build() -> DataFrame:
+        # repartition: the single-file fixture parquet yields 2 input
+        # splits, which would serialize the 64-dim cosine assignment
+        # pass on 2 cores (same pattern as dedup._corpus_with_near_dups)
+        emb = (
+            load_table(spark, sf_dir, "embeddings")
+            .select("vec_id", "embedding")
+            .repartition(spark.sparkContext.defaultParallelism)
+            .withColumn("nrm", F.expr(vectors.norm("embedding")))
+        )
+        return _ivf_assign(emb, _ivf_centroids(emb), "embedding", "nrm")
+
+    assigned = _index(spark, "ivf_lists", build, sf_dir)
+    cents = _ivf_centroids(assigned)
+    probes = _ivf_probes(_query_frame(assigned), cents, n_probe, "q_vec", "q_nrm")
     # scan only the probed lists, exact rerank
     return _cosine_topk(assigned.join(F.broadcast(probes), "list_id").filter("vec_id != q_id"))
 

@@ -419,6 +419,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     batch; state never lives in executor memory.
     """
     import os
+    import shutil
     import tempfile
 
     target = os.path.join(
@@ -452,6 +453,9 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     q = stream.writeStream.foreachBatch(merge_batch).trigger(availableNow=True).start()
     q.awaitTermination()
+    # the stage copy is only read by the swap; the snapshot stays, the
+    # returned frame reads it lazily
+    shutil.rmtree(target + "_stage", ignore_errors=True)
 
     snap = spark.read.parquet(target)
     return snap.select(
@@ -893,8 +897,9 @@ def streaming_minhash_dedup(
 
     q = stream.writeStream.foreachBatch(process).trigger(availableNow=True).start()
     q.awaitTermination()
-    out = spark.read.parquet(dec_dir).select("doc_id", "admitted").cache()
-    out.count()  # materialize before the temp dirs go away
+    # materialized before the temp dirs go away; a local checkpoint,
+    # not cache(): a CacheManager entry would outlive every build
+    out = spark.read.parquet(dec_dir).select("doc_id", "admitted").localCheckpoint(eager=True)
     shutil.rmtree(work, ignore_errors=True)
     return out
 

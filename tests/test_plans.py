@@ -232,13 +232,25 @@ def test_dedup_embedding_cosine_no_all_pairs_join(spark, sf_dir):
     )
 
 
-def test_jaccard_caps_shingle_document_frequency(spark, sf_dir):
+def test_jaccard_caps_shingle_document_frequency(spark, sf_dir, monkeypatch):
     # the shingle self-join must be preceded by the hot-shingle
     # anti-join (document-frequency cap) — without it one stop-phrase
-    # shingle shared by k docs yields k^2 candidate rows at scale
+    # shingle shared by k docs yields k^2 candidate rows at scale. The
+    # self-joined postings are an index leaf (dedup._index), so the cap
+    # is in the plan of the frame that index is built from.
     from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators import dedup
 
-    text = explain.plan_text(dedup.dedup_ngram_jaccard(spark, sf_dir))
+    builds = []
+    index = dedup._index
+
+    def spy(spark, name, build, *params, **kwargs):
+        builds.append(build)
+        return index(spark, name, build, *params, **kwargs)
+
+    monkeypatch.setattr(dedup, "_index", spy)
+    dedup.dedup_ngram_jaccard(spark, sf_dir)
+    (build,) = builds
+    text = explain.plan_text(build())
     assert "LeftAnti" in text, "hot-shingle document-frequency cap must gate the join"
 
 

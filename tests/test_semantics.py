@@ -151,6 +151,38 @@ def test_streaming_drain_drops_its_sink_view(spark, sf_dir):
         assert compare_frames(df.toPandas(), oracle) == []
 
 
+def test_streaming_minhash_dedup_adds_no_cache_entry(spark, sf_dir):
+    """The streaming MinHash decisions outlive their per-call work
+    directory as a local checkpoint, not as a CacheManager entry: three
+    builds leave the session's cached-entry count unchanged, and each
+    frame still reads its decisions."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    frames = [sw.streaming_minhash_dedup(spark, sf_dir) for _ in range(3)]
+    assert cache.numCachedEntries() == before
+    counts = {df.count() for df in frames}
+    assert len(counts) == 1 and counts.pop() > 0
+
+
+def test_streaming_upsert_leaves_no_stage_directory(spark, sf_dir):
+    """``streaming_foreachbatch_upsert`` swaps each merge through a
+    ``<target>_stage`` copy and removes it after the stream ends; the
+    target stays, because the returned frame reads it lazily."""
+    import tempfile
+
+    root = os.path.join(tempfile.gettempdir(), "sparkbench_upsert")
+
+    def listed() -> set[str]:
+        return set(os.listdir(root)) if os.path.isdir(root) else set()
+
+    before = listed()
+    df = sw.streaming_foreachbatch_upsert(spark, sf_dir)
+    added = listed() - before
+    assert not [d for d in added if d.endswith("_stage")], added
+    assert len(added) == 1
+    assert df.count() > 0
+
+
 def test_observation_fires_under_local_checkpoint(spark):
     """Pin the mechanism dedup_clusters_cc's convergence witness rides
     on: an ``Observation`` metric attached below ``localCheckpoint(
@@ -664,13 +696,16 @@ def test_ivf_quantizer_consumers_agree(spark, sf_dir, monkeypatch):
     assigns in the session, ``list_id`` in the stored IVF-PQ index and
     ``plist_id`` (the rank-1 list) in the stored top-2 membership table
     are the same list."""
-    persisted = []
-    persist = similarity._persist_index
-    monkeypatch.setattr(
-        similarity, "_persist_index", lambda df: persisted.append(df) or persist(df)
-    )
+    indexed = []
+    index = similarity._index
+
+    def spy(*args, **kwargs):
+        indexed.append(index(*args, **kwargs))
+        return indexed[-1]
+
+    monkeypatch.setattr(similarity, "_index", spy)
     similarity.ivf_ann_topk(spark, sf_dir)
-    (lists,) = persisted
+    (lists,) = indexed
     session = {r.vec_id: r.list_id for r in lists.select("vec_id", "list_id").collect()}
     idx = similarity._ensure_ivfpq_index_table(spark, sf_dir)
     stored = {r.vec_id: r.list_id for r in idx.select("vec_id", "list_id").collect()}
