@@ -43,7 +43,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, load_table_parallel
+from ..catalog import load_table, load_table_parallel, source_of
 
 MOD = 1_000_000_007
 N_HASHES = 32
@@ -228,10 +228,12 @@ _INDEXES: dict[tuple, tuple[list, list, DataFrame | tuple[DataFrame, DataFrame]]
 
 def _file_identities(uris: list[str]) -> list[tuple[str, int, int] | None]:
     """(path, size, mtime_ns) per input-file URI, None where the file
-    cannot be stat'ed (a remote URI, a deleted file)."""
+    cannot be stat'ed (a remote URI, a deleted file). A re-chunked scan
+    copy stands for its source (``catalog.source_of``), whose identity
+    is the one that changes on a rewrite."""
     out = []
     for uri in uris:
-        path = unquote(urlparse(uri).path)
+        path = source_of(unquote(urlparse(uri).path))
         try:
             st = os.stat(path)
         except OSError:

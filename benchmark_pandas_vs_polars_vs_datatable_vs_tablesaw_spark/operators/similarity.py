@@ -70,14 +70,13 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|Q|x|C|xdim) waste. sqrt is deterministic so dot/(nrm*q_nrm)
     is bit-identical to the inlined cosine.
 
-    The scan reads with a parallelism floor: the per-candidate
-    dot-product folds serialize on a single-split scan otherwise
-    (interleaved probe min 1.46 s -> 0.96 s at sf0.1). The scoring stays
-    a JVM expression fold, so the query has no Python node and no
-    driver-side collect while it is built.
+    The scan is a plain load: a round-robin parallelism floor measured
+    below the 1.15x keep rule at sf0.1 (results/scan_floor_ab.json).
+    The scoring stays a JVM expression fold, so the query has no Python
+    node and no driver-side collect while it is built.
     """
     emb = (
-        load_table_parallel(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
         .withColumn("nrm", F.expr(vectors.norm("embedding")))
     )

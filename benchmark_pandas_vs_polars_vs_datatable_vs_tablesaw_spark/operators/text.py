@@ -2055,11 +2055,10 @@ def boilerplate_phrase_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1). Per-doc agg is the second and final shuffle. Only
     affected docs (>= 1 boilerplate phrase) are emitted.
 
-    r14: scan-parallelism floor added (guide §2.5) — the phrase build
-    and the window sort were serializing on the single-split scan;
-    measured 1.9x at sf0.1 (results/scan_floor_ab.json).
+    The scan is a plain load: a round-robin parallelism floor measured
+    below the 1.15x keep rule at sf0.1 (results/scan_floor_ab.json).
     """
-    docs = load_table_parallel(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     phrases = docs.withColumn("toks", F.split("text", " ")).select(
         "doc_id",
         F.explode(F.expr(f"array_distinct({_PHRASE_EXPR})")).alias("ph"),

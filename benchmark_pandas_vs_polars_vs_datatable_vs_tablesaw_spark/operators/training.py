@@ -220,11 +220,10 @@ def linear_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary state anywhere; constant-width feature space at any
     corpus size.
 
-    r14: scan-parallelism floor added (guide §2.5) — the per-token md5
-    bucket hash was serializing on the single-split scan; measured
-    1.3x at sf0.1 (results/scan_floor_ab.json).
+    The scan is a plain load: a round-robin parallelism floor measured
+    below the 1.15x keep rule at sf0.1 (results/scan_floor_ab.json).
     """
-    docs = load_table_parallel(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", "source", F.explode(_tokens()).alias("token"))
     w = F.expr(_W_SQL.format(b=_hex4_bucket("token", 64)))
     perdoc = (

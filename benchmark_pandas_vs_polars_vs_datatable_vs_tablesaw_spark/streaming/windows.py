@@ -453,17 +453,17 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     q = stream.writeStream.foreachBatch(merge_batch).trigger(availableNow=True).start()
     q.awaitTermination()
-    # the stage copy is only read by the swap; the snapshot stays, the
-    # returned frame reads it lazily
-    shutil.rmtree(target + "_stage", ignore_errors=True)
-
-    snap = spark.read.parquet(target)
-    return snap.select(
+    # the returned rows are checkpointed before the snapshot and its
+    # stage copy are deleted, so a build leaves no directory behind
+    snap = spark.read.parquet(target).select(
         "user_id",
         "event_type",
         F.date_format("ts", TS_FMT).alias("last_ts"),
         F.round("value", 4).alias("last_value"),
-    )
+    ).localCheckpoint(eager=True)
+    shutil.rmtree(target + "_stage", ignore_errors=True)
+    shutil.rmtree(target, ignore_errors=True)
+    return snap
 
 
 STREAMING_UPSERT_ORACLE = """

@@ -9,7 +9,10 @@ to hundreds of py4j round trips, not thousands. Three guards:
 - ``catalog``'s schema cache is keyed on file identity, so a rewritten
   fixture is re-read, never served a stale schema;
 - ``dedup._index`` builds an index once per session and file identity,
-  so a rebuild reuses it and a rewritten fixture rebuilds it.
+  so a rebuild reuses it and a rewritten fixture rebuilds it;
+- ``catalog``'s re-chunked scan copy is written once per file identity,
+  scans as one task per split, answers like its source, and is replaced
+  (with every index built over it) when the source is rewritten.
 """
 
 from __future__ import annotations
@@ -180,3 +183,146 @@ def test_index_is_built_once_per_session_and_file_identity(spark, sf_dir, tmp_pa
     assert not any(a is b for a, b in zip(fresh, rewritten))
     uuid_other = other._jsparkSession.sessionUUID()
     assert {key[0] for key in dedup._INDEXES} == {uuid_other}, "other sessions' entries stay"
+
+
+# the split confs the re-chunk tests lower, and a size ratio that gives
+# the sf0.001 lineitem three splits, open-cost bound as sf0.1's is
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+_SPLITS = 3
+
+
+@pytest.fixture
+def small_splits(spark, sf_dir, tmp_path, monkeypatch):
+    """The sf0.001 fixtures copied to ``tmp_path/fixtures``, the temp dir
+    moved to ``tmp_path/tmp`` and both split confs set to lineitem's
+    size / 2.6, so lineitem plans three splits; the confs are restored
+    afterwards. Yields (fixture dir, copy dir, re-chunk call log)."""
+    import shutil
+    import tempfile
+
+    fixtures = tmp_path / "fixtures"
+    fixtures.mkdir()
+    for name in catalog.TABLES:
+        shutil.copyfile(os.path.join(sf_dir, f"{name}.parquet"), fixtures / f"{name}.parquet")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    calls = []
+    rechunk = catalog._rechunk
+
+    def spy(*args):
+        calls.append(args[1])
+        return rechunk(*args)
+
+    monkeypatch.setattr(catalog, "_rechunk", spy)
+    old = {k: spark.conf.get(k, None) for k in _SPLIT_CONFS}
+    split = str(int(os.path.getsize(fixtures / "lineitem.parquet") / (_SPLITS - 0.4)))
+    for k in _SPLIT_CONFS:
+        spark.conf.set(k, split)
+    try:
+        yield str(fixtures), str(tmp_path / "tmp" / "sparkbench_scan"), calls
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _row_groups(path: str) -> list[int]:
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    return [meta.row_group(i).num_rows for i in range(meta.num_row_groups)]
+
+
+def test_single_row_group_file_scans_one_task_per_split(spark, small_splits):
+    """A one-row-group file that Spark splits three ways is read through
+    a copy in three row groups, written once per file identity: each
+    split's task reads rows, Spark infers the source's schema from the
+    copy, a second read writes and fires nothing, and the queries over
+    it match their oracles."""
+    from pyspark.sql import functions as F
+
+    from tests.helpers import compare_frames, duckdb_connection
+
+    fixtures, copies, calls = small_splits
+    src = os.path.join(fixtures, "lineitem.parquet")
+    assert _row_groups(src) == [6000]
+    assert spark.read.parquet(src).rdd.getNumPartitions() == _SPLITS  # Spark's own split rule
+
+    df = catalog.load_table(spark, fixtures, "lineitem")
+    scan = catalog._scan(spark, src)
+    assert calls == [src] and scan.splits == _SPLITS
+    assert os.listdir(copies) == [os.path.basename(scan.path)]
+    assert catalog.source_of(scan.path) == src
+    assert _row_groups(scan.path) == [2000, 2000, 2000]
+    tasks = df.groupBy(F.spark_partition_id()).count().collect()
+    assert sorted(r["count"] for r in tasks) == [2000] * _SPLITS
+    assert spark.read.parquet(scan.path).schema == spark.read.parquet(src).schema
+
+    mtime = os.stat(scan.path).st_mtime_ns
+    again, jobs = _jobs_in_group(spark, lambda: catalog.load_table(spark, fixtures, "lineitem"))
+    assert not jobs and calls == [src]
+    assert os.listdir(copies) == [os.path.basename(scan.path)]
+    assert os.stat(scan.path).st_mtime_ns == mtime
+    assert again.inputFiles() == df.inputFiles()
+
+    con = duckdb_connection(fixtures)
+    try:
+        for name in ("q1_pricing_summary", "groupby_mean"):
+            got = registry.queries()[name](spark, fixtures)
+            assert any(scan.path in f for f in got.inputFiles()), name
+            want = con.execute(registry.oracle_sql()[name]).fetchdf()
+            assert compare_frames(got.toPandas(), want) == [], name
+    finally:
+        con.close()
+
+
+def test_file_with_enough_row_groups_is_read_in_place(spark, small_splits):
+    import pyarrow.parquet as pq
+
+    fixtures, copies, calls = small_splits
+    src = os.path.join(fixtures, "lineitem.parquet")
+    pq.write_table(pq.read_table(src), src, row_group_size=1000)
+    assert len(_row_groups(src)) == 6
+
+    df = catalog.load_table(spark, fixtures, "lineitem")
+    scan = catalog._scan(spark, src)
+    assert calls == [] and scan.path == src
+    assert scan.splits == spark.read.parquet(src).rdd.getNumPartitions() <= 6
+    assert not os.path.exists(copies)
+    assert df.count() == 6000
+
+
+def test_rewritten_source_replaces_its_copy_and_index(spark, small_splits):
+    """An index leaf built over a re-chunked file records its source's
+    identity, so rewriting the source rebuilds the index without a read
+    in between, and the next read replaces the copy."""
+    import pyarrow.parquet as pq
+
+    from benchmark_pandas_vs_polars_vs_datatable_vs_tablesaw_spark.operators import dedup
+
+    fixtures, copies, calls = small_splits
+    src = os.path.join(fixtures, "lineitem.parquet")
+
+    def index():
+        return dedup._index(
+            spark, "rechunk_probe",
+            lambda: catalog.load_table(spark, fixtures, "lineitem").groupBy("l_returnflag").count(),
+            fixtures,
+        )
+
+    first = index()
+    old_copy = catalog._scan(spark, src).path
+    assert index() is first
+    assert sum(r["count"] for r in first.collect()) == 6000
+
+    table = pq.read_table(src)
+    pq.write_table(table.slice(0, 4500), src)
+    rebuilt = index()
+    assert rebuilt is not first
+    assert sum(r["count"] for r in rebuilt.collect()) == 4500
+    new_copy = catalog._scan(spark, src).path
+    assert calls == [src, src] and new_copy != old_copy
+    assert os.listdir(copies) == [os.path.basename(new_copy)]
+    assert catalog.source_of(old_copy) == old_copy
